@@ -19,6 +19,10 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // the board's registry queries generate far more than Spark's
+      // default 100 cached classes; at 100 the cache evicts and the JIT
+      // recompiles some every round, splitting CPU figures in two
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

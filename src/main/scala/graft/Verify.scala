@@ -17,6 +17,8 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // as graft.Bench: keep every generated class of the registry cached
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,9 +2,15 @@ package graft.lake
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StringType, StructType}
 
 import graft.core.{DerivedFixture, QueryDef, QueryGroup, Tables => T}
 import graft.streaming.CommitFiles
@@ -25,7 +31,10 @@ import graft.streaming.CommitFiles
   *                               unit (path, fid, n, per-StatsCols
   *                               min/max — the same stats ZLayout's
   *                               manifest carries, so pruned reads work
-  *                               across shared files)
+  *                               across shared files — and the unit's
+  *                               data files with their byte lengths)
+  *   root/v=<n>/schema           the snapshot's data schema (JSON): the
+  *                               union of its units' schemas
   *   root/v=<n>/deletes          OPTIONAL pending equality-delete keys
   *                               (merge-on-read; absent = none)
   *   root/_latest                committed-version pointer
@@ -40,19 +49,21 @@ import graft.streaming.CommitFiles
   * never a readable half-commit ([[CowSpec]] exercises the
   * stale-target replay).
   *
-  * Scale notes. The filelist is metadata (one row per data unit — ~1e5
-  * rows for a 100 TB table at 1 GiB units); reads collect only PATHS
-  * from it, which every engine's scan planning needs driver-side anyway.
-  * [[mergeInto]]'s rewrite set is the distinct fids of the upsert rows —
-  * bounded by update LOCALITY, not table size; every other file is
-  * carried by reference. [[deleteWhere]] touches zero data files (the
-  * merge-on-read bargain: cheap commit, one anti-join at read). The
-  * delete file is CDC-sized BY CONTRACT — [[compactDeletes]] exists to
-  * fold it back into the data before it grows past broadcast range, and
-  * the read path force-broadcasts it on that contract (never left to
-  * AQE size stats — the round-11 lesson). [[compactDeletes]] rewrites
-  * only files whose o_orderkey stats overlap a pending delete key
-  * (stats-targeted, like the pruned read).
+  * Scale notes. The filelist and schema are the scan plan (Delta's "the
+  * log is the listing"): every data read — snapshot, pruned, and a
+  * commit's reads of the units it rewrites — plans from them alone, so
+  * planning lists no directory and opens no footer at any unit count.
+  * Reads collect only the planned units' rows (~1e5 for a 100 TB table
+  * at 1 GiB units), which any engine's scan planning needs driver-side.
+  * A commit rewrites the units its upsert fids land in plus the units
+  * that HOLD a deleted key, found exactly ([[unitsHolding]]) — bounded
+  * by change locality, never table size; every other unit is carried by
+  * reference. [[deleteWhere]] touches zero data files (the merge-on-read
+  * bargain: cheap commit, one anti-join at read). Change sets, the
+  * delete file included, are CDC-sized BY CONTRACT ([[compactDeletes]]
+  * folds deletes back before they outgrow broadcast range): reads
+  * force-broadcast the delete keys and writers hold change keys
+  * driver-side on that contract (never AQE size stats).
   *
   * MERGE contract: upsert rows locate their target file via CURRENT
   * clustering values (ck, dy) — an upsert that changes a clustered
@@ -71,40 +82,90 @@ object CowTable {
 
   private def pointer(root: String) = Paths.get(root, "_latest")
 
-  /** Base scan schema (what [[init]] writes, minus the fid partition
-    * column) — the empty-table fallback. Evolved snapshots may be wider. */
-  private val baseSchema = StructType(Seq(
-    StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-    StructField("o_orderstatus", org.apache.spark.sql.types.StringType),
-    StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-    StructField("ck", LongType), StructField("dy", LongType),
-    StructField("zkey", LongType)))
+  /** A unit's scan plan: its pool name and data files (name, bytes). */
+  private[lake] final case class DataUnit(path: String, files: Seq[(String, Long)])
 
-  private def emptyBase(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], baseSchema)
+  /** The filelist's fixed schema: reads pass it, so no filelist read
+    * starts a schema-inference job. */
+  private val FilelistSchema = StructType.fromDDL("path STRING, fid BIGINT, n BIGINT, " +
+    ZLayout.StatsCols.map(c => s"${c}_min BIGINT, ${c}_max BIGINT, ").mkString +
+    "files ARRAY<STRUCT<name: STRING, len: BIGINT>>")
+  private val KeySchema = StructType.fromDDL("o_orderkey BIGINT")
 
   /** [[ZLayout.ordersProjection]] that PRESERVES any extra (evolved)
     * columns the input carries beyond the orders base schema. */
   private def project(df: DataFrame): DataFrame = {
     val extras = df.columns.toSeq.diff(Seq("o_orderkey", "o_custkey",
       "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority"))
-    df.select((Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+    withFid(df.select((Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate") ++ extras).map(col): _*)
       .withColumn("ck", col("o_custkey") % 65536L)
       .withColumn("dy", datediff(to_date(col("o_orderdate")),
         lit("1970-01-01").cast("date")).cast("long"))
       .withColumn("zkey",
-        graft.functions.ZOrderKey.zorderKey(col("ck"), col("dy") % 65536L))
-      .withColumn("fid", expr(s"zkey div ${ZLayout.FidDiv}L"))
+        graft.functions.ZOrderKey.zorderKey(col("ck"), col("dy") % 65536L)))
       .drop("o_orderdate")
+  }
+
+  private def withFid(df: DataFrame): DataFrame =
+    df.withColumn("fid", expr(s"zkey div ${ZLayout.FidDiv}L"))
+
+  /** The units of (path, files) rows, in path order. */
+  private def units(rows: Seq[Row]): Seq[DataUnit] = rows.map(r => DataUnit(r.getString(0),
+    Option(r.getSeq[Row](1)).getOrElse(Nil).map(f => (f.getString(0), f.getLong(1)))))
+    .sortBy(_.path)
+
+  private def units(fl: DataFrame): Seq[DataUnit] =
+    units(fl.select(col("path"), col("files")).collect().toSeq)
+
+  private def without(fl: DataFrame, gone: Seq[DataUnit]): DataFrame =
+    if (gone.isEmpty) fl else fl.filter(!col("path").isin(gone.map(_.path): _*))
+
+  /** The manifest-backed scan of `units`, read as `schema`. */
+  private[lake] def scan(s: SparkSession, root: String, schema: StructType,
+      units: Seq[DataUnit]): DataFrame =
+    GraftBridge.parquetFiles(s, schema, units.flatMap { u =>
+      require(u.files.nonEmpty, s"cow_table: unit ${u.path} at $root names " +
+        "no data files in its filelist")
+      u.files.map { case (name, len) => (s"$root/files/${u.path}/$name", len) }
+    })
+
+  /** `schema` widened by the columns of rows about to land as units: new
+    * columns append (pre-existing units read them as null); a column that
+    * changes type is refused, as a mergeSchema read would refuse it. */
+  private def widen(schema: StructType, rows: DataFrame): StructType = {
+    val add = rows.schema.filter(_.name != "fid")
+    add.foreach(f => schema.find(_.name == f.name).foreach(g =>
+      require(g.dataType == f.dataType, s"cow_table: column ${f.name} is " +
+        s"${g.dataType} in the table but ${f.dataType} in the new rows")))
+    StructType((schema ++ add.filterNot(f => schema.fieldNames.contains(f.name)))
+      .map(_.copy(nullable = true)))
+  }
+
+  /** A unit's row count, then min and max of each [[ZLayout.StatsCols]]
+    * column, from its files' footers (what its write recorded: no job
+    * re-reads the rows); a column with no non-null value gets nulls. */
+  private def footerStats(conf: Configuration, dir: java.io.File, files: Seq[String]): Seq[Any] = {
+    val blocks = files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(s"$dir/$f"), conf))
+      try r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).toSeq finally r.close()
+    }
+    blocks.map(_.getRowCount).sum +: ZLayout.StatsCols.flatMap { c =>
+      val st = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == c).get.getStatistics)
+      require(!st.exists(_.isEmpty), s"cow_table: unit $dir's footer has no statistics for $c")
+      val vs = st.filter(_.hasNonNullValue).flatMap(x => Seq(x.genericGetMin, x.genericGetMax))
+        .map(_.asInstanceOf[Number].longValue)
+      if (vs.isEmpty) Seq(null, null) else Seq(vs.min, vs.max)
+    }
   }
 
   /** Write `laid` (projected rows with fid) into the pool as
     * `g<gen>-f<fid>` units; returns the filelist rows describing them.
     * Deterministic unit names make a crashed attempt's replay an
-    * overwrite. The per-unit move loop is driver-side but bounded by the
-    * AFFECTED fid count (metadata-scale), never the table. */
-  private def writeUnits(laid: DataFrame, root: String, gen: Long): DataFrame = {
+    * overwrite. The driver-side steps (move, listing, footer stats) are
+    * bounded by the AFFECTED fid count (metadata-scale), never the table
+    * — and never re-run `laid`. */
+  private def writeUnits(laid: DataFrame, root: String, gen: Long): Seq[Row] = {
     val s = laid.sparkSession
     val staging = s"$root/.staging-g$gen"
     CommitFiles.rmTree(new java.io.File(staging))
@@ -117,39 +178,53 @@ object CowTable {
     Option(pool.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith(s"g$gen-"))
       .foreach(CommitFiles.rmTree)
-    Option(new java.io.File(staging).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("fid="))
-      .foreach { f =>
-        val fid = f.getName.stripPrefix("fid=")
-        Files.move(f.toPath, Paths.get(pool.getPath, s"g$gen-f$fid"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
+    val rows = Option(new java.io.File(staging).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("fid=")).sortBy(_.getName).map { f =>
+        val fid = f.getName.stripPrefix("fid=").toLong
+        val unit = new java.io.File(pool, s"g$gen-f$fid")
+        Files.move(f.toPath, unit.toPath, StandardCopyOption.ATOMIC_MOVE)
+        val files = unit.listFiles().filterNot(d => d.getName.startsWith(".") ||
+          d.getName.startsWith("_")).map(d => (d.getName, d.length())).sorted.toSeq
+        Row.fromSeq(Seq(unit.getName, fid) ++ footerStats(s.sparkContext.hadoopConfiguration,
+          unit, files.map(_._1)) :+ files.map { case (name, len) => Row(name, len) })
+      }.toSeq
     CommitFiles.rmTree(new java.io.File(staging))
-    val stats = ZLayout.StatsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    laid.groupBy(col("fid"))
-      .agg(count(lit(1)).as("n"), stats: _*)
-      .withColumn("path", concat(lit(s"g$gen-f"), col("fid").cast("string")))
+    rows
   }
 
-  /** Stage `v=<gen>` (filelist + optional deletes), atomic-rename it into
-    * place, flip the pointer. */
+  /** Stage `v=<gen>` (filelist, schema, optional deletes), atomic-rename
+    * it into place, flip the pointer. */
   private def commit(root: String, gen: Long, filelist: DataFrame,
-      deletes: Option[DataFrame]): Long = {
+      schema: StructType, deletes: Option[DataFrame]): Long = {
     val tmp = s"$root/.tmp-v=$gen"
     CommitFiles.rmTree(new java.io.File(tmp))
     CommitFiles.rmTree(new java.io.File(s"$root/v=$gen")) // crashed pre-flip attempt
     filelist.coalesce(1).write.parquet(s"$tmp/filelist")
-    deletes.foreach(_.coalesce(1).write.parquet(s"$tmp/deletes"))
+    Files.writeString(Paths.get(tmp, "schema"), schema.json)
+    deletes.foreach(_.select(col("o_orderkey").cast(LongType)).coalesce(1)
+      .write.parquet(s"$tmp/deletes"))
     Files.move(Paths.get(tmp), Paths.get(root, s"v=$gen"),
       StandardCopyOption.ATOMIC_MOVE)
     CommitFiles.atomicWrite(pointer(root), gen.toString)
     gen
   }
 
+  /** Commit v+1: `fl` minus the `retired` units plus `laid` written as
+    * new gen-(v+1) units, under v's schema widened by `laid`'s. */
+  private def rewrite(root: String, v: Long, fl: DataFrame,
+      retired: Seq[DataUnit], laid: DataFrame, deletes: Option[DataFrame]): Long = {
+    val added = laid.sparkSession.createDataFrame(
+      writeUnits(laid, root, v + 1).asJava, FilelistSchema)
+    commit(root, v + 1, without(fl, retired).unionByName(added),
+      widen(schemaAt(root, v), laid), deletes)
+  }
+
   private def committedOrFail(root: String): Long =
     CommitFiles.readPointer(pointer(root)).getOrElse(
       throw new IllegalStateException(s"cow_table: nothing committed at $root"))
+
+  private def readFilelist(s: SparkSession, root: String, v: Long): DataFrame =
+    s.read.schema(FilelistSchema).parquet(s"$root/v=$v/filelist")
 
   /** The snapshot's filelist. Version checks ride [[TimeTravel]]'s
     * semantics: retained, committed, loud otherwise. */
@@ -162,53 +237,73 @@ object CowTable {
     require(committed.exists(v <= _),
       s"cow_table: version $v at $root is not committed (latest " +
         s"committed: $committed) — an uncommitted snapshot may be torn")
-    s.read.parquet(s"$root/v=$v/filelist")
+    readFilelist(s, root, v)
   }
 
-  private def deletesAt(s: SparkSession, root: String, v: Long): Option[DataFrame] =
+  /** The snapshot's data schema, as its commit stored it. */
+  private[lake] def schemaAt(root: String, v: Long): StructType = {
+    val f = Paths.get(root, s"v=$v", "schema")
+    require(Files.exists(f), s"cow_table: v=$v at $root stores no schema")
+    DataType.fromJson(Files.readString(f)).asInstanceOf[StructType]
+  }
+
+  private[lake] def deletesAt(s: SparkSession, root: String, v: Long): Option[DataFrame] =
     if (Files.exists(Paths.get(root, s"v=$v", "deletes")))
-      Some(s.read.parquet(s"$root/v=$v/deletes"))
+      Some(s.read.schema(KeySchema).parquet(s"$root/v=$v/deletes"))
     else None
 
-  /** Unit paths of a snapshot, overlap-planned through the shared
+  /** `data` minus v's pending merge-on-read deletes, the delete side
+    * force-broadcast per the CDC-size contract (see class doc). */
+  private def minusDeletes(s: SparkSession, root: String, v: Long,
+      data: DataFrame): DataFrame =
+    deletesAt(s, root, v).fold(data)(del =>
+      data.join(broadcast(del), Seq("o_orderkey"), "left_anti"))
+
+  /** Filelist rows whose o_orderkey stats overlap one of `keys`. */
+  private def mayHold(keys: Array[Long]): Column =
+    if (keys.isEmpty) lit(false)
+    else exists(typedLit(keys), _.between(col("o_orderkey_min"), col("o_orderkey_max")))
+
+  /** The `cand` units (narrowed by [[mayHold]]) that hold at least one of
+    * `keys`, exactly: a probe of only the candidates' key column (through
+    * the manifest scan) names each unit a key really lives in — a file's
+    * parent dir is its unit. The one key→unit locator of delete
+    * targeting, delete compaction and the clustering check. */
+  private def unitsHolding(s: SparkSession, root: String, cand: Seq[DataUnit],
+      keys: Array[Long]): Seq[DataUnit] = {
+    if (keys.isEmpty || cand.isEmpty) return Nil
+    val hit = scan(s, root, KeySchema, cand)
+      .filter(col("o_orderkey").isInCollection(keys))
+      .select(element_at(split(col("_metadata.file_path"), "/"), -2))
+      .collect().map(_.getString(0)).toSet // one row per key hit: CDC-sized
+    cand.filter(u => hit(u.path))
+  }
+
+  /** Units of a snapshot, overlap-planned through the shared
     * [[OverlapPlan]] two-mode planner (the filelist IS the COW
     * manifest): driver-local under `spark.graft.lake.localPlanBytes`, a
-    * Spark job above it — only SURVIVING unit paths reach the driver,
+    * Spark job above it — only SURVIVING units reach the driver,
     * bounded by the true overlap set, never the manifest size, which is
     * the shape that holds at ~10⁶-unit manifests. Both modes compute
     * the identical set (`CowSpec` pins them equal on the COW fixture
     * and at a 200k-unit synthetic filelist). Empty `ranges` = an
-    * unpruned read: every committed path (the full collect is then
-    * inherent — the read needs each path). */
+    * unpruned read: every committed unit (the full collect is then
+    * inherent — the read needs each unit's files). */
   private[lake] def plannedPaths(s: SparkSession, root: String, v: Long,
-      ranges: Seq[(String, Long, Long)]): Seq[String] = {
+      ranges: Seq[(String, Long, Long)]): Seq[DataUnit] = {
     val fl = filelist(s, root, v)
-    val rel =
-      if (ranges.isEmpty) fl.select(col("path")).collect()
-        .map(_.getString(0)).toSeq
-      else OverlapPlan.survivors(s, fl,
-          OverlapPlan.bytesOf(Paths.get(root, s"v=$v", "filelist")),
-          Seq(col("path")), ranges)
-        .map(_.getString(0))
-    rel.sorted.map(p => s"$root/files/$p")
+    if (ranges.isEmpty) units(fl)
+    else units(OverlapPlan.survivors(s, fl,
+      OverlapPlan.bytesOf(Paths.get(root, s"v=$v", "filelist")),
+      Seq(col("path"), col("files")), ranges))
   }
 
   /** Read one committed snapshot: the union of its referenced units
-    * (merge-schema across an evolution boundary — pre-evolution units
-    * surface added columns as null), minus pending merge-on-read
-    * deletes. The delete side is force-broadcast per the CDC-size
-    * contract (see class doc). */
+    * under the stored snapshot schema (pre-evolution units surface added
+    * columns as null), minus pending merge-on-read deletes. */
   def readVersion(s: SparkSession, root: String, v: Long): DataFrame = {
-    val paths = plannedPaths(s, root, v, Nil)
-    val data =
-      if (paths.isEmpty) emptyBase(s)
-      else s.read.option("mergeSchema", "true").parquet(paths: _*)
-    deletesAt(s, root, v) match {
-      case Some(del) =>
-        data.join(broadcast(del.select(col("o_orderkey"))),
-          Seq("o_orderkey"), "left_anti")
-      case None => data
-    }
+    val planned = plannedPaths(s, root, v, Nil) // checks v first
+    minusDeletes(s, root, v, scan(s, root, schemaAt(root, v), planned))
   }
 
   /** Manifest-pruned snapshot read on any [[ZLayout.StatsCols]] ranges:
@@ -219,26 +314,17 @@ object CowTable {
       ranges: Seq[(String, Long, Long)]): DataFrame = {
     ranges.foreach { case (c, _, _) => require(ZLayout.StatsCols.contains(c),
       s"cow_table: no stats for column '$c' (have: ${ZLayout.StatsCols.mkString(", ")})") }
-    val paths = plannedPaths(s, root, v, ranges)
-    val data =
-      if (paths.isEmpty) emptyBase(s)
-      else s.read.option("mergeSchema", "true").parquet(paths: _*)
-    val exact = ranges.map { case (c, lo, hi) => col(c).between(lo, hi) }
-      .foldLeft(data)((df, p) => df.filter(p))
-    deletesAt(s, root, v) match {
-      case Some(del) =>
-        exact.join(broadcast(del.select(col("o_orderkey"))),
-          Seq("o_orderkey"), "left_anti")
-      case None => exact
-    }
+    val planned = plannedPaths(s, root, v, ranges) // checks v first
+    minusDeletes(s, root, v, ranges.map { case (c, lo, hi) => col(c).between(lo, hi) }
+      .foldLeft(scan(s, root, schemaAt(root, v), planned))((df, p) => df.filter(p)))
   }
 
   /** v=0: the whole table as gen-0 units. */
   def init(s: SparkSession, orders: DataFrame, root: String): Long = {
     Files.createDirectories(Paths.get(root))
     val laid = project(orders)
-    val rows = writeUnits(laid, root, gen = 0L)
-    commit(root, 0L, rows, None)
+    commit(root, 0L, s.createDataFrame(writeUnits(laid, root, 0L).asJava,
+      FilelistSchema), widen(new StructType(), laid), None)
   }
 
   /** Copy-on-write MERGE INTO: for each upsert row, replace the matching
@@ -253,24 +339,23 @@ object CowTable {
     * set [[VerifyClusteringKey]] true and the merge verifies no upsert
     * key already exists in a unit OUTSIDE its rewrite set, refusing
     * loudly instead of silently committing two rows for one key. Cost:
-    * a key-column-only scan of the kept units whose o_orderkey stats
-    * overlap an upsert key — exact, but since o_orderkey is
-    * layout-independent those stats ranges are broad, so the check can
-    * approach a key-column table scan; hence opt-in, for writers whose
-    * upsert source can't prove its clustering. */
+    * a key-column-only probe of the kept units whose o_orderkey stats
+    * overlap an upsert key ([[unitsHolding]]) — exact, but since
+    * o_orderkey is layout-independent those stats ranges are broad, so
+    * the check can approach a key-column table scan; hence opt-in, for
+    * writers whose upsert source can't prove its clustering. */
   def mergeInto(s: SparkSession, root: String, upserts: DataFrame): Long =
     applyChanges(s, root, upserts,
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("o_orderkey", LongType)))))
+      s.createDataFrame(java.util.List.of[Row](), KeySchema))
 
   /** One COW commit applying a FOLDED CDC batch: upserts (replace by
     * o_orderkey, else insert) plus row deletes, in one new version. The
     * rewrite set is the union of the fids the upsert rows land in and
-    * the units whose o_orderkey stats overlap a delete key — both
-    * bounded by the change set, never the table. A key in BOTH sets is
-    * the caller's fold bug (StreamMerge.lastWins exists to collapse a
-    * batch to one change per key) and is refused loudly — the
-    * alternative is silently picking a winner. */
+    * the units that hold a delete key ([[unitsHolding]]) — both bounded
+    * by the change set, never the table. A key in BOTH sets is the
+    * caller's fold bug (StreamMerge.lastWins exists to collapse a batch
+    * to one change per key) and is refused loudly — the alternative is
+    * silently picking a winner. */
   def applyChanges(s: SparkSession, root: String, upserts: DataFrame,
       deleteKeys: DataFrame): Long = {
     val v = committedOrFail(root)
@@ -280,69 +365,41 @@ object CowTable {
         "pending delete of the same key has no single right answer)")
     val fl = filelist(s, root, v)
     val proj = project(upserts).persist()
-    val delK = deleteKeys.select(col("o_orderkey").as("dk")).distinct().persist()
     try {
-      require(proj.join(broadcast(delK),
-          proj("o_orderkey") === delK("dk"), "left_semi").isEmpty,
+      // both change sets in one job, which also fills the persisted projection
+      val (del, up) = proj.select(col("o_orderkey").cast(LongType), col("fid"), lit(false))
+        .union(deleteKeys.select(col("o_orderkey").cast(LongType), lit(null).cast(LongType),
+          lit(true))).collect().partition(_.getBoolean(2))
+      val delKeys = del.map(_.getLong(0)).distinct
+      val upKeys = up.map(_.getLong(0)).distinct
+      require(!upKeys.exists(delKeys.toSet),
         "cow_table: a key appears as both an upsert and a delete in one " +
           "batch — fold the batch to one change per key first")
-      val upFids = proj.select(col("fid")).distinct()
-        .collect().map(_.getLong(0)).sorted // bounded by update locality
-      val upPaths =
-        if (upFids.isEmpty) Array.empty[String]
-        else fl.filter(col("fid").isin(upFids: _*))
-          .select(col("path")).collect().map(_.getString(0))
-      val delPaths = fl.join(broadcast(delK),
-          col("dk").between(col("o_orderkey_min"), col("o_orderkey_max")),
-          "left_semi")
-        .select(col("path")).collect().map(_.getString(0))
-      val affPaths = (upPaths ++ delPaths).distinct.sorted
+      val upFids = up.map(_.getLong(1)).distinct.sorted // bounded by update locality
+      // one job for the upserts' units and the delete probe's candidates
+      val isUp = if (upFids.isEmpty) lit(false) else col("fid").isin(upFids: _*)
+      val (upRows, cand) = fl.filter(isUp || mayHold(delKeys))
+        .select(col("path"), col("files"), isUp).collect().partition(_.getBoolean(2))
+      val aff = (units(upRows.toSeq) ++ unitsHolding(s, root, units(cand.toSeq), delKeys))
+        .sortBy(_.path)
       // opt-in clustering-contract verification (see mergeInto doc): an
       // upsert key living in a unit we are NOT rewriting means its ck/dy
-      // differ from the stored row's — committing would duplicate the
-      // key. Stats-overlap narrows the suspect set; the exact check reads
-      // only the suspects' key column.
+      // differ from the stored row's — committing would duplicate the key
       if (s.conf.getOption(VerifyClusteringKey).exists(_.toBoolean)) {
-        val upK = proj.select(col("o_orderkey").as("uk")).distinct()
-        val suspects = fl.filter(!col("path").isin(affPaths: _*))
-          .join(broadcast(upK),
-            col("uk").between(col("o_orderkey_min"), col("o_orderkey_max")),
-            "left_semi")
-          .select(col("path")).collect().map(_.getString(0)).sorted
-        if (suspects.nonEmpty) {
-          val clash = s.read.option("mergeSchema", "true")
-            .parquet(suspects.map(p => s"$root/files/$p"): _*)
-            .select(col("o_orderkey"))
-            .join(broadcast(upK.select(col("uk").as("o_orderkey"))),
-              Seq("o_orderkey"), "left_semi")
-            .limit(1).collect()
-          require(clash.isEmpty,
-            s"cow_table: upsert key ${clash.headOption.map(_.getLong(0))
-              .getOrElse(-1L)} already exists in a unit outside its " +
-              "clustering target (the upsert's ck/dy differ from the " +
-              "stored row's) — merging would commit two rows for one " +
-              "key; fix the upsert's clustering columns or rewrite the " +
-              "stored row first")
-        }
+        val clash = unitsHolding(s, root, units(without(fl, aff).filter(mayHold(upKeys))), upKeys)
+        require(clash.isEmpty,
+          s"cow_table: an upsert key already exists in unit " +
+            s"${clash.headOption.map(_.path).getOrElse("")} outside its " +
+            "clustering target (the upsert's ck/dy differ from the " +
+            "stored row's) — merging would commit two rows for one " +
+            "key; fix the upsert's clustering columns or rewrite the " +
+            "stored row first")
       }
-      val gen = v + 1
-      val oldData =
-        if (affPaths.isEmpty) emptyBase(s)
-        else s.read.option("mergeSchema", "true")
-          .parquet(affPaths.map(p => s"$root/files/$p"): _*)
-      val merged = oldData
-        .withColumn("fid", expr(s"zkey div ${ZLayout.FidDiv}L"))
-        .join(proj.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
-        .join(broadcast(delK.select(col("dk").as("o_orderkey"))),
-          Seq("o_orderkey"), "left_anti")
+      val merged = withFid(scan(s, root, schemaAt(root, v), aff))
+        .filter(!col("o_orderkey").isInCollection(upKeys ++ delKeys))
         .unionByName(proj, allowMissingColumns = true)
-      val newRows = writeUnits(merged, root, gen)
-      val kept =
-        if (affPaths.isEmpty) fl
-        else fl.filter(!col("path").isin(affPaths: _*))
-      commit(root, gen, kept.unionByName(newRows.select(fl.columns.map(col): _*)),
-        None)
-    } finally { proj.unpersist(); delK.unpersist() }
+      rewrite(root, v, fl, aff, merged, None)
+    } finally proj.unpersist()
   }
 
   /** Merge-on-read equality delete: commits a new snapshot whose
@@ -352,48 +409,24 @@ object CowTable {
     * [[compactDeletes]] folds it. */
   def deleteWhere(s: SparkSession, root: String, keys: DataFrame): Long = {
     val v = committedOrFail(root)
-    val gen = v + 1
-    val fl = filelist(s, root, v)
-    val del = keys.select(col("o_orderkey")).distinct()
-    val all = deletesAt(s, root, v) match {
-      case Some(old) => old.select(col("o_orderkey")).unionByName(del).distinct()
-      case None      => del
-    }
-    commit(root, gen, fl, Some(all))
+    val del = keys.select(col("o_orderkey").cast(LongType)).distinct()
+    val all = deletesAt(s, root, v).fold(del)(_.unionByName(del).distinct())
+    commit(root, v + 1, filelist(s, root, v), schemaAt(root, v), Some(all))
   }
 
-  /** Fold pending deletes into the data: rewrite ONLY units whose
-    * o_orderkey stats overlap a pending key (stats-targeted — a unit no
-    * delete can touch is carried by reference), commit a snapshot with
-    * an empty delete set. No-op (pointer still advances) when nothing is
-    * pending. */
+  /** Fold pending deletes into the data: rewrite ONLY the units that
+    * hold a pending key ([[unitsHolding]] — a unit no delete touches is
+    * carried by reference), commit a snapshot with an empty delete set.
+    * No-op (pointer still advances) when nothing is pending. */
   def compactDeletes(s: SparkSession, root: String): Long = {
     val v = committedOrFail(root)
-    val gen = v + 1
     val fl = filelist(s, root, v)
-    deletesAt(s, root, v) match {
-      case None => commit(root, gen, fl, None)
-      case Some(del) =>
-        val delKeys = del.select(col("o_orderkey").as("dk"))
-        val affPaths = fl.join(broadcast(delKeys),
-            col("dk").between(col("o_orderkey_min"), col("o_orderkey_max")),
-            "left_semi")
-          .select(col("path")).collect().map(_.getString(0)).sorted
-        val newRows = if (affPaths.isEmpty) None else {
-          val data = s.read.option("mergeSchema", "true")
-            .parquet(affPaths.map(p => s"$root/files/$p"): _*)
-            .withColumn("fid", expr(s"zkey div ${ZLayout.FidDiv}L"))
-            .join(broadcast(del.select(col("o_orderkey"))),
-              Seq("o_orderkey"), "left_anti")
-          Some(writeUnits(data, root, gen))
-        }
-        val kept =
-          if (affPaths.isEmpty) fl
-          else fl.filter(!col("path").isin(affPaths: _*))
-        commit(root, gen,
-          newRows.fold(kept)(nr =>
-            kept.unionByName(nr.select(fl.columns.map(col): _*))), None)
-    }
+    val keys = deletesAt(s, root, v).fold(Array.empty[Long])(_.collect().map(_.getLong(0)).distinct)
+    val aff =
+      if (keys.isEmpty) Nil else unitsHolding(s, root, units(fl.filter(mayHold(keys))), keys)
+    if (aff.isEmpty) commit(root, v + 1, fl, schemaAt(root, v), None)
+    else rewrite(root, v, fl, aff, withFid(scan(s, root, schemaAt(root, v), aff))
+      .filter(!col("o_orderkey").isInCollection(keys)), None)
   }
 
   /** Small-file maintenance (the OPTIMIZE of Delta/Iceberg): appends
@@ -404,28 +437,18 @@ object CowTable {
     * oracle as the pre-optimize read), pending merge-on-read deletes
     * are copied forward untouched, and the rewrite set is exactly the
     * fragmented fids. Mixed-schema units of one fid compact to the
-    * union schema with null backfill — the same surface a mergeSchema
-    * read already serves. */
+    * snapshot schema with null backfill — the surface a read already
+    * serves. With no fid split there is nothing to compact: returns the
+    * current version and commits nothing (as Delta and Iceberg do). */
   def optimize(s: SparkSession, root: String): Long = {
     val v = committedOrFail(root)
-    val gen = v + 1
     val fl = filelist(s, root, v)
-    val fragFids = fl.groupBy(col("fid")).agg(count(lit(1)).as("k"))
-      .filter(col("k") > 1).select(col("fid"))
-      .collect().map(_.getLong(0)).sorted
-    if (fragFids.isEmpty) commit(root, gen, fl, deletesAt(s, root, v))
-    else {
-      val affPaths = fl.filter(col("fid").isin(fragFids: _*))
-        .select(col("path")).collect().map(_.getString(0)).sorted
-      val data = s.read.option("mergeSchema", "true")
-        .parquet(affPaths.map(p => s"$root/files/$p"): _*)
-        .withColumn("fid", expr(s"zkey div ${ZLayout.FidDiv}L"))
-      val newRows = writeUnits(data, root, gen)
-      val kept = fl.filter(!col("path").isin(affPaths: _*))
-      commit(root, gen,
-        kept.unionByName(newRows.select(fl.columns.map(col): _*)),
-        deletesAt(s, root, v))
-    }
+    val split = fl.select(col("fid")).collect().map(_.getLong(0)) // 8 bytes a unit
+      .groupBy(identity).collect { case (fid, us) if us.length > 1 => fid }.toSeq
+    val frag = if (split.isEmpty) Nil else units(fl.filter(col("fid").isin(split: _*)))
+    if (frag.isEmpty) v
+    else rewrite(root, v, fl, frag, withFid(scan(s, root, schemaAt(root, v), frag)),
+      deletesAt(s, root, v))
   }
 
   /** Retention + garbage collection, in that order: expire all but the
@@ -449,13 +472,13 @@ object CowTable {
       .filter(_.getName.startsWith(".vacuum-")).foreach(CommitFiles.rmTree)
     val committed = TimeTravel.latestVersion(root)
       .getOrElse(return (expired, Seq.empty))
-    val referenced = TimeTravel.versions(root).flatMap { v =>
-      // a torn in-flight dir may lack its filelist; its units are still
-      // covered by the generation guard below
-      if (!Files.exists(Paths.get(root, s"v=$v", "filelist"))) Seq.empty
-      else s.read.parquet(s"$root/v=$v/filelist").select(col("path"))
-        .collect().map(_.getString(0)).toSeq
-    }.toSet
+    // a torn in-flight dir may lack its filelist; its units are still
+    // covered by the generation guard below. One job for every list.
+    val referenced = TimeTravel.versions(root)
+      .filter(v => Files.exists(Paths.get(root, s"v=$v", "filelist")))
+      .map(v => readFilelist(s, root, v).select(col("path")))
+      .reduceOption(_.union(_)).fold(Set.empty[String])(
+        _.collect().map(_.getString(0)).toSet)
     def genOf(name: String): Long =
       name.stripPrefix("g").takeWhile(_ != '-').toLong
     val victims = Option(pool.listFiles()).getOrElse(Array.empty)
@@ -472,13 +495,12 @@ object CowTable {
 
   /** Additive schema evolution: append rows that carry EXTRA columns as
     * new (wider-schema) units; every existing unit is shared untouched —
-    * the zero-rewrite evolution Iceberg/Delta allow. Reads across the
-    * boundary null-backfill the added columns for pre-evolution units
-    * (mergeSchema). Appended keys must be new — this is an append, not a
-    * merge. */
+    * the zero-rewrite evolution Iceberg/Delta allow. The snapshot schema
+    * widens, so reads across the boundary null-backfill the added
+    * columns for pre-evolution units. Appended keys must be new — this
+    * is an append, not a merge. */
   def appendEvolved(s: SparkSession, root: String, rows: DataFrame): Long = {
     val v = committedOrFail(root)
-    val gen = v + 1
     val fl = filelist(s, root, v)
     val laid = project(rows)
     // 'keys must be new' enforced, not just documented (the applyChanges
@@ -487,18 +509,21 @@ object CowTable {
     // hide the NEW row at read. One broadcast semi-join against the
     // CDC-sized delete set, only when deletes are pending (the graded
     // chain appends post-compaction, so the common path pays nothing).
-    deletesAt(s, root, v).foreach { del =>
-      require(laid.join(broadcast(del.select(col("o_orderkey"))),
-          Seq("o_orderkey"), "left_semi").isEmpty,
+    val pending = deletesAt(s, root, v)
+    pending.foreach { del =>
+      require(laid.join(broadcast(del), Seq("o_orderkey"), "left_semi").isEmpty,
         s"cow_table: appendEvolved keys overlap v=$v's pending " +
           "merge-on-read delete set — the appended rows would be hidden " +
           "at read; run compactDeletes first (appended keys must be NEW)")
     }
-    val newRows = writeUnits(laid, root, gen)
-    commit(root, gen,
-      fl.unionByName(newRows.select(fl.columns.map(col): _*)),
-      deletesAt(s, root, v))
+    rewrite(root, v, fl, Nil, laid, pending)
   }
+}
+
+/** The COW fixtures' shared layout tag. v2: filelists name their data
+  * files and each version stores its schema. */
+private[graft] abstract class CowDerived(root: String) extends DerivedFixture(root, "orders") {
+  override protected[graft] def layoutTag: String = "v2"
 }
 
 /** One table, one history: v0 init → v1 COW merge (updates + inserts) →
@@ -509,7 +534,7 @@ object CowTable {
   * snapshots. All stripes are o_custkey ranges (= ck, custkey < 65536 in
   * the fixtures): clustering-localized, so the COW rewrite set stays a
   * small fid subset ([[CowSpec]] asserts the sharing). */
-object CowFixture extends DerivedFixture("lake_cow", "orders") {
+object CowFixture extends CowDerived("lake_cow") {
   val UpdLo = 100L; val UpdHi = 199L   // update stripe: price += 1.00
   val InsLo = 300L; val InsHi = 349L   // insert stripe: key + InsOffset
   val InsOffset = 2000000000L
@@ -542,7 +567,7 @@ object CowFixture extends DerivedFixture("lake_cow", "orders") {
   * batch core [[graft.streaming.StreamCow]] drives per micro-batch. The
   * delete stripe excludes the update stripe's custkeys so the batch is
   * one-change-per-key (the fold contract applyChanges enforces). */
-object CdcFixture extends DerivedFixture("lake_cdc", "orders") {
+object CdcFixture extends CowDerived("lake_cdc") {
   val UpdLo = 700L; val UpdHi = 749L   // U: price += 2.00
   val InsLo = 800L; val InsHi = 819L   // I: key + InsOffset
   val InsOffset = 3000000000L
@@ -567,7 +592,7 @@ object CdcFixture extends DerivedFixture("lake_cdc", "orders") {
   * crash on missing files otherwise — the registry row grades that
   * reachability every round), and the unreferenced rewritten-away
   * gen-0 units must be gone ([[CowSpec]] asserts the deletion). */
-object CowVacuumFixture extends DerivedFixture("lake_cow_vacuum", "orders") {
+object CowVacuumFixture extends CowDerived("lake_cow_vacuum") {
   val ALo = 100L; val AHi = 199L // merge A: price += 1.00
   val BLo = 200L; val BHi = 299L // merge B: price += 1.00
 
@@ -589,7 +614,7 @@ object CowVacuumFixture extends DerivedFixture("lake_cow_vacuum", "orders") {
   * units each, then [[CowTable.optimize]] bin-packs them back — the
   * post-OPTIMIZE read must equal the raw replay of all three row sets
   * (layout maintenance must be invisible to content). */
-object CowOptimizeFixture extends DerivedFixture("lake_cow_opt", "orders") {
+object CowOptimizeFixture extends CowDerived("lake_cow_opt") {
   val A1Lo = 0L; val A1Hi = 399L;   val A1Off = 5000000000L
   val A2Lo = 200L; val A2Hi = 599L; val A2Off = 6000000000L
 
@@ -818,46 +843,34 @@ object CowQueries extends QueryGroup {
     * bounded by the commit's change locality, never table size. */
   private def cowIncrAgg(s: SparkSession, d: String): DataFrame = {
     val p = CowFixture.ensure(s, d)
-    // ALL metadata in TWO Spark jobs, not one per version/loop edge:
-    // the 5 filelists (key stats riding along) union-collect once, the
-    // pending delete sets union-collect once. The former per-version
-    // collects plus the per-edge stats-join collects were ~15 tiny jobs
-    // of pure scheduling latency — three rounds of board slot #1 — for
-    // metadata that is KB-sized at any table size (change-locality-
-    // bounded, like Iceberg local planning). The unit-key overlap test
-    // then runs on the collected stats driver-side.
+    // ALL metadata in TWO Spark jobs, not one per version/loop edge: the
+    // 5 filelists (key stats and data files riding along) union-collect
+    // once, the pending delete sets once — KB-sized metadata at any table
+    // size; the unit-key overlap test then runs on it driver-side.
     val flRows = (0L to 4L).map(v =>
         CowTable.filelist(s, p, v).select(lit(v).as("v"), col("path"),
-          col("o_orderkey_min"), col("o_orderkey_max")))
+          col("o_orderkey_min"), col("o_orderkey_max"), col("files")))
       .reduce(_.unionByName(_)).collect()
     // (path, key-min, key-max) per version
     val fl: Map[Long, Seq[(String, Long, Long)]] = flRows
       .groupBy(_.getLong(0)).view.mapValues(_.toSeq.map(r =>
         (r.getString(1), r.getLong(2), r.getLong(3)))).toMap
+    val unitFiles: Map[String, Seq[(String, Long)]] = flRows.map(r =>
+      r.getString(1) -> r.getSeq[Row](4).map(f => (f.getString(0), f.getLong(1)))).toMap
     def pathsAt(v: Long): Set[String] =
       fl.getOrElse(v, Seq.empty).map(_._1).toSet
-    val delVs = (0L to 4L).filter(v => java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, s"v=$v", "deletes")))
-    val dels: Map[Long, Set[Long]] =
-      if (delVs.isEmpty) Map.empty
-      else delVs.map { v =>
-          val df = s.read.parquet(s"$p/v=$v/deletes")
-          df.select(lit(v).as("v"), col(df.columns.head).as("k"))
-        }.reduce(_.unionByName(_)).collect()
-        .groupBy(_.getLong(0)).view
-        .mapValues(_.map(_.getLong(1)).toSet).toMap
+    val dels: Map[Long, Set[Long]] = (0L to 4L)
+      .flatMap(v => CowTable.deletesAt(s, p, v).map(_.select(lit(v).as("v"), col("o_orderkey"))))
+      .reduceOption(_.unionByName(_)).fold(Array.empty[Row])(_.collect())
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     def delsAt(v: Long): Set[Long] = dels.getOrElse(v, Set.empty)
     def readUnits(paths: Iterable[String]): DataFrame =
-      s.read.option("mergeSchema", "true")
-        .parquet(paths.toSeq.sorted.map(x => s"$p/files/$x"): _*)
+      CowTable.scan(s, p, CowTable.schemaAt(p, 4L),
+          paths.toSeq.sorted.map(x => CowTable.DataUnit(x, unitFiles(x))))
         .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"))
-    // r15: the former shape aggregated each refresh STEP separately —
-    // up to 17 per-step groupBys (one exchange each) plus a broadcast
-    // semi-join per delete diff, unioned and re-aggregated: a ~20-stage
-    // DAG of KB-sized work whose cost was pure scheduling latency
-    // (board slot #1 four rounds running). The version loop's edge
-    // diffs are all driver-side set algebra on the ALREADY-collected
-    // metadata, so fold them there into NET SIGNS first:
+    // The version loop's edge diffs are driver-side set algebra on the
+    // ALREADY-collected metadata (one aggregation per refresh step was a
+    // ~20-stage DAG of KB-sized work), so fold them into NET SIGNS:
     //   - per unit path: +1 when added, -1 when retired, summed over
     //     edges — a unit added then compacted away nets 0 and is never
     //     read at all;

@@ -2,6 +2,10 @@ package graft.lake
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -32,9 +36,68 @@ class CowSpec extends SparkSuite {
     CowFixture.ensure(spark, src)
   }
 
-  private def paths(v: Long): Set[String] =
-    CowTable.filelist(spark, root, v).select("path")
+  private def paths(v: Long, dir: String = root): Set[String] =
+    CowTable.filelist(spark, dir, v).select("path")
       .collect().map(_.getString(0)).toSet
+
+  private lazy val grid: DataFrame = {
+    root // writes the grid orders
+    spark.read.parquet(s"${graft.core.Fixtures.path("cowspec_grid")}/orders.parquet")
+  }
+
+  private def fresh(name: String): String = {
+    val dir = graft.core.Fixtures.path(name)
+    graft.streaming.CommitFiles.rmTree(new java.io.File(dir))
+    dir
+  }
+
+  private def keys(df: DataFrame): Set[Long] =
+    df.select("o_orderkey").collect().map(_.getLong(0)).toSet
+
+  /** Units of snapshot `v` holding any of `ks`, from a plain Spark read of
+    * the unit dirs: independent of CowTable's own key locator. */
+  private def holders(dir: String, v: Long, ks: Set[Long]): Set[String] =
+    spark.read.parquet(paths(v, dir).toSeq.map(u => s"$dir/files/$u"): _*)
+      .filter(col("o_orderkey").isInCollection(ks))
+      .select(col("_metadata.file_path")).distinct().collect()
+      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getParent.getName).toSet
+
+  /** Units of snapshot `v` whose o_orderkey stats overlap any of `ks`. */
+  private def statsOverlap(dir: String, v: Long, ks: Set[Long]): Set[String] =
+    CowTable.filelist(spark, dir, v)
+      .select("path", "o_orderkey_min", "o_orderkey_max").collect()
+      .filter(r => ks.exists(k => k >= r.getLong(1) && k <= r.getLong(2)))
+      .map(_.getString(0)).toSet
+
+  /** (description, stage names) of every Spark job `f` starts. Marker
+    * jobs bracket `f`: the listener bus is FIFO, so once the closing
+    * marker's start is seen, every job of `f` has been seen. */
+  private def jobsOf(f: => Unit): Seq[(String, Seq[String])] = {
+    val tag = s"cowspec-marker-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val marks = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (desc == tag) marks.incrementAndGet()
+        else if (marks.get == 1) seen.add((desc, e.stageInfos.map(_.name)))
+      }
+    }
+    val sc = spark.sparkContext
+    def mark(): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(1 to 1, 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      mark(); f; mark()
+      val deadline = System.nanoTime() + 30000000000L
+      while (marks.get < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marks.get == 2, "the listener never saw the closing marker job")
+    } finally sc.removeSparkListener(l)
+    seen.asScala.toSeq
+  }
 
   test("COW merge rewrites only the touched fids; everything else is shared") {
     val v0 = paths(0L); val v1 = paths(1L)
@@ -373,5 +436,79 @@ class CowSpec extends SparkSuite {
     assert(e.getMessage.contains("not committed"), e.getMessage)
     assert(CowTable.readVersion(spark, dir, 0L).count() == 20,
       "the committed head must stay readable past the torn dir")
+  }
+
+  test("optimize with no split fid commits nothing and returns the current version") {
+    val dir = fresh("cowspec_opt_noop")
+    val orders = graft.core.Tables.orders(spark, sfDir)
+      .orderBy("o_orderkey").limit(40)
+    CowTable.init(spark, orders, dir)
+    CowTable.mergeInto(spark, dir,
+      orders.limit(3).withColumn("o_totalprice", lit(5.0)))
+    val before = TimeTravel.versions(dir)
+    assert(before == Seq(0L, 1L))
+    assert(CowTable.optimize(spark, dir) == 1L)
+    assert(TimeTravel.versions(dir) == before, "a no-op optimize must write no v= dir")
+    assert(TimeTravel.latestVersion(dir) == Some(1L), "the pointer must not move")
+  }
+
+  test("a CDC batch rewrites exactly the units holding an upsert or a deleted key") {
+    val dir = fresh("cowspec_cdc_exact")
+    CowTable.init(spark, grid, dir)
+    // deletes fall inside the upsert stripe (odd keys of ck 100-199 beside
+    // the even-key updates of ck 100-149) plus one far key; inserts copy
+    // updated rows' ck/dy, so they land in the updated rows' units
+    val upd = grid.filter(col("o_custkey").between(100L, 149L) &&
+        col("o_orderkey") % 2 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 1.0)
+    val ins = upd.filter(col("o_custkey") < 120L)
+      .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+    val del = grid.filter((col("o_custkey").between(100L, 199L) &&
+        col("o_orderkey") % 2 === 1) || col("o_orderkey") === 3000L + 4096L * 5)
+      .select("o_orderkey")
+    val delKeys = keys(del)
+    val expected = holders(dir, 0L, keys(upd) ++ delKeys)
+    // the stats rule alone would pick more: exactness is observable here
+    assert(statsOverlap(dir, 0L, delKeys).size > holders(dir, 0L, delKeys).size)
+    assert(expected.size < paths(0L, dir).size)
+    CowTable.applyChanges(spark, dir, upd.unionByName(ins), del)
+    assert(paths(0L, dir) -- paths(1L, dir) == expected)
+    assert(CowTable.readVersion(spark, dir, 1L).count() ==
+      grid.count() + ins.count() - delKeys.size)
+
+    // the merge-on-read path: compaction rewrites exactly the key holders
+    val mor = fresh("cowspec_compact_exact")
+    CowTable.init(spark, grid, mor)
+    CowTable.deleteWhere(spark, mor, del)
+    val holding = holders(mor, 1L, delKeys)
+    assert(statsOverlap(mor, 1L, delKeys).size > holding.size)
+    CowTable.compactDeletes(spark, mor)
+    assert(paths(1L, mor) -- paths(2L, mor) == holding)
+    val v2 = CowTable.readVersion(spark, mor, 2L)
+    assert(v2.count() == grid.count() - delKeys.size)
+    assert(v2.filter(col("o_orderkey").isInCollection(delKeys)).isEmpty)
+  }
+
+  test("a read of more than 32 units starts no listing or schema-inference job") {
+    val dir = fresh("cowspec_wide")
+    // custkeys over the whole 16-bit ck range: 64 fids, one unit each
+    val rows = (0 until 4096).map { i =>
+      ((i + 300000).toLong, i * 16L, "O", i * 1.0,
+        new java.sql.Timestamp(9131L * 86400000L), "1-URGENT")
+    }
+    CowTable.init(spark, rows.toDF("o_orderkey", "o_custkey", "o_orderstatus",
+      "o_totalprice", "o_orderdate", "o_orderpriority"), dir)
+    // Spark lists more than 32 paths with a parallel listing job
+    assert(paths(0L, dir).size > 32)
+    var n = 0L
+    val jobs = jobsOf { n = CowTable.readVersion(spark, dir, 0L).count() }
+    assert(n == 4096)
+    assert(!jobs.exists(_._1.startsWith("Listing leaf files")),
+      s"a listing job ran: $jobs")
+    // DataFrameReader.parquet's jobs (listing, footer schema inference)
+    // carry its call site
+    assert(!jobs.exists(_._2.exists(_.startsWith("parquet at"))),
+      s"a schema-inference job ran: $jobs")
+    info(s"${jobs.size} jobs: ${jobs.flatMap(_._2).distinct.mkString(", ")}")
   }
 }
