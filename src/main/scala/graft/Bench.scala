@@ -13,19 +13,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the board's registry queries generate far more than Spark's
-      // default 100 cached classes; at 100 the cache evicts and the JIT
-      // recompiles some every round, splitting CPU figures in two
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nCpus = cpus.toInt
+    val spark = graft.core.LocalSession(nCpus, "graft-bench")
     // warm-up actions so JVM/codegen startup AND parquet/Hadoop-FS init
     // aren't charged to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -58,7 +47,6 @@ object Bench {
     // gate stretches each query's budget by the load measured AROUND the
     // pass that produced its min time, so a spike pays for exactly the
     // stretch it hit.
-    val nCpus = scala.util.Try(cpus.toInt).getOrElse(4)
     val SegmentSize = 48
     def onePass(): (IndexedSeq[(String, Option[Double])], IndexedSeq[Double]) = {
       val cals = scala.collection.mutable.ArrayBuffer(calibrate(spark, nCpus))

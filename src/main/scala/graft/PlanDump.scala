@@ -2,28 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump `.explain("formatted")` for named registry queries to
   * files — the plan evidence committed under plans/<round>/. Usage:
   * `runMain graft.PlanDump <dataDir> <outDir> <query> [query...]`.
-  * Session config mirrors Bench so the dumped plan is the benched plan. */
+  * Bench's session ([[graft.core.LocalSession]]), so the dumped plan is
+  * the benched plan. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dataDir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession(cpus.toInt, "graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val txt =

@@ -108,15 +108,7 @@ object RagDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("target/ragdemo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession(4, "graft-rag-demo")
     val r = run(spark, sfDir, outDir)
     val nCtx = r.contexts.count()
     println(s"""{"demo":"rag","kept":${r.nKept},"chunks":${r.nChunks},""" +

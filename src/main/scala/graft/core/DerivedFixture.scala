@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
 
 /** Plumbing for datasets DERIVED from a testdata table (the lake
-  * layouts, the graph pair memo): built under
+  * layouts): built under
   * `<root>/<md5(sourceDir)>/<sourceFingerprint>-<layoutTag>`, STAGED
   * (written into a `.tmp-` sibling, atomic rename into place) so a
   * crash mid-build can never leave a partial fixture a later session
@@ -32,12 +32,8 @@ private[graft] abstract class DerivedFixture(root: String, table: String) {
 
   /** Bump when the derivation itself changes (e.g. a layout knob): the
     * tag joins the source fingerprint in the path, so a code change can
-    * never silently reuse a layout built by older code. `protected[graft]`
-    * (not `protected`) so a LAYERED fixture — one whose build READS
-    * another fixture — can compose its upstream's tag into its own,
-    * making an upstream derivation bump invalidate dependents
-    * automatically instead of relying on a hand-synced double bump. */
-  protected[graft] def layoutTag: String = "v1"
+    * never silently reuse a layout built by older code. */
+  protected def layoutTag: String = "v1"
 
   private def dirKey(d: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -45,11 +41,7 @@ private[graft] abstract class DerivedFixture(root: String, table: String) {
 
   def ensure(s: SparkSession, d: String): String = synchronized {
     val dir = d.replaceFirst("^file:(//)?", "").stripSuffix("/")
-    // `table` may name several source tables comma-separated (a fixture
-    // derived from a join must re-derive when EITHER side changes)
-    val fp = table.split(',')
-      .map(t => SourceState.fingerprint(dir, t)).mkString("-") +
-      s"-$layoutTag"
+    val fp = SourceState.fingerprint(dir, table) + s"-$layoutTag"
     live.get(dir) match {
       case Some((oldFp, p)) if oldFp == fp && new java.io.File(p).exists() => p
       case _ =>

@@ -14,8 +14,8 @@ object Fixtures {
   def path(name: String): String = s"$dir/$name"
 }
 
-/** Source-file-state fingerprinting for DERIVED fixtures (lake layouts,
-  * the graph pair memo): any cache derived from a testdata table must be
+/** Source-file-state fingerprinting for DERIVED fixtures (the lake
+  * layouts): any cache derived from a testdata table must be
   * keyed by the table's name/size/mtime walk, never its path alone — the
   * driver regenerates /root/testdata between rounds, and a stale derived
   * dataset at the same path would silently grade against the wrong

@@ -523,7 +523,7 @@ object CowTable {
 /** The COW fixtures' shared layout tag. v2: filelists name their data
   * files and each version stores its schema. */
 private[graft] abstract class CowDerived(root: String) extends DerivedFixture(root, "orders") {
-  override protected[graft] def layoutTag: String = "v2"
+  override protected def layoutTag: String = "v2"
 }
 
 /** One table, one history: v0 init → v1 COW merge (updates + inserts) →

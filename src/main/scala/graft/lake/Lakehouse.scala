@@ -278,7 +278,7 @@ object TimeTravel {
 object LakeFixture extends DerivedFixture("lake_orders", "orders") {
   // the "s2" suffix versions the MANIFEST schema (per-StatsCols min/max
   // since round 12) — older fixtures' two-dim manifests must re-derive
-  override protected[graft] def layoutTag: String =
+  override protected def layoutTag: String =
     s"z${java.lang.Long.numberOfTrailingZeros(ZLayout.FidDiv)}-s2"
   override protected def build(s: SparkSession, dir: String, target: String): Unit =
     ZLayout.write(T.orders(s, dir), target)

@@ -399,46 +399,11 @@ object Ann extends QueryGroup {
       .select(col("q_id"), col("q_emb"), col("q_nsq"), col("ck"))
   }
 
-  /** Disk+session memo for [[ivfModelDirect]] — the quantizer model is
-    * rebuilt by FIVE consumers (`ivf`, `ivfPq`, `clusterDiverse`,
-    * `IvfIndex.build`, `StreamIvf`), and the Lloyd loop is a chain of
-    * many tiny Spark jobs (two collects per iteration) whose wall time
-    * tracks scheduler noise, not data size — the round-13 bench breach.
-    * Same DerivedFixture pattern as `Dedup.SimhashPairsMemo`: the first
-    * consumer in a session pays one build + parquet write of the
-    * (vec_id, ck) assignments and the k-row centroid table, the rest
-    * read it back; keyed by the SOURCE FILE STATE of embeddings.parquet.
-    * Params live in the fixture ROOT (not the layoutTag) so one
-    * parameterization's stale-sweep can never delete another's fixture
-    * (IvfSweepSpec builds k=64/256 beside the registry's k=8). */
-  private final class IvfModelFixture(k: Int, iters: Int)
-      extends graft.core.DerivedFixture(s"ann_ivf_model/k$k-i$iters",
-        "embeddings") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit = {
-      val (lists, cdf) = ivfModelDirect(s, dir, k, iters)
-      lists.select(col("vec_id"), col("ck")).write.parquet(s"$target/assign")
-      cdf.write.parquet(s"$target/cents")
-    }
-  }
-
-  private val ivfModelMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Int), IvfModelFixture]
-
   /** Deterministic IVF model shared by the top-k probe path and the
     * cluster-balanced sampler: the final inverted lists (vec_id, emb,
-    * nsq, ck) plus the centroid table (ck, cvec, c_nsq). Memoized on
-    * disk per (source state, k, iters); values are identical to
-    * [[ivfModelDirect]] (doubles round-trip parquet exactly). */
+    * nsq, ck) plus the centroid table (ck, cvec, c_nsq). One distributed
+    * Lloyd loop; only the k×dim centroid table touches the driver. */
   private[graft] def ivfModel(s: SparkSession, d: String, k: Int,
-      iters: Int): (DataFrame, DataFrame) =
-    // r16 memo policy: graded consumers run the Lloyd loop inline (its
-    // normed base is cached in-plan); the fixture stays for tests/tools.
-    ivfModelDirect(s, d, k, iters)
-
-  /** The un-memoized model build — one distributed Lloyd loop; only the
-    * k×dim centroid table touches the driver. */
-  private[llm] def ivfModelDirect(s: SparkSession, d: String, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
     import s.implicits._
     require(k >= 1 && iters >= 0,
@@ -508,36 +473,8 @@ object Ann extends QueryGroup {
     * distributed job per Lloyd round, not one per subspace. Only the
     * nsub×ksub×dsub codebook (constant-size) touches the driver.
     * Returns (codes (vec_id, s, ck), codebook (s, ck, cvec, c_nsq),
-    * dsub, nsub). Memoized on disk per (source state, m, ksub, iters) —
-    * see [[pqModel]]. */
-  private final class PqModelFixture(m: Int, ksub: Int, iters: Int)
-      extends graft.core.DerivedFixture(s"ann_pq_model/m$m-k$ksub-i$iters",
-        "embeddings") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit = {
-      val (codes, cdf, dsub, nsub) = pqModelDirect(s, dir, m, ksub, iters)
-      codes.write.parquet(s"$target/codes")
-      cdf.write.parquet(s"$target/cents")
-      // the derived grid dims ride along as a 1-row table so the read
-      // path never re-scans the corpus for max(size(emb))
-      s.range(1).select(lit(dsub).as("dsub"), lit(nsub).as("nsub"))
-        .write.parquet(s"$target/meta")
-    }
-  }
-
-  private val pqModelMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, Int, Int), PqModelFixture]
-
-  /** Disk+session memo for [[pqModelDirect]] — same economics and
-    * pattern as [[ivfModel]]'s memo (two consumers: `pqAdc`, `ivfPq`;
-    * the per-subspace Lloyd loop is the scheduler-noise-bound cost). */
-  private[llm] def pqModel(s: SparkSession, d: String, m: Int, ksub: Int,
-      iters: Int): (DataFrame, DataFrame, Int, Int) =
-    // r16 memo policy: graded consumers run the per-subspace Lloyd loop
-    // inline; the fixture stays for tests/tools.
-    pqModelDirect(s, d, m, ksub, iters)
-
-  private[llm] def pqModelDirect(s: SparkSession, d: String, m: Int,
+    * dsub, nsub). */
+  private[llm] def pqModel(s: SparkSession, d: String, m: Int,
       ksub: Int, iters: Int): (DataFrame, DataFrame, Int, Int) = {
     import s.implicits._
     require(m >= 1 && ksub >= 1 && iters >= 0,
@@ -1154,31 +1091,16 @@ object Ann extends QueryGroup {
     * ties on the RAW cosine break to the lower neighbor_id in both
     * engines; output cosine rounds through DECIMAL(10,4) (the rerank
     * convention). */
-  /** Disk+session memo of the k-NN edge relation: the Σ cell² self-join
-    * plus the per-node window is the expensive stage, and BOTH graded
-    * consumers start from the identical rows (`emb_knn_graph` presents
-    * them sorted; `emb_knn_components` thresholds + CC over them). */
-  private[llm] object KnnGraphMemo
-      extends graft.core.DerivedFixture("knn_graph_memo", "embeddings") {
-    // v2: the (label, bucket) cell rides along — constant per vec_id,
-    // needed by emb_knn_components' per-cell CC (see knnComponents)
-    override protected[graft] def layoutTag: String = "v2-cell"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      knnGraphDirect(s, dir).write.parquet(target)
-
-    def edges(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  private def knnGraph(s: SparkSession, d: String): DataFrame =
-    // r16 memo policy: the edge relation derives inline
-    knnGraphDirect(s, d)
+  private def knnGraphGraded(s: SparkSession, d: String): DataFrame =
+    knnGraph(s, d)
       .select(col("vec_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
       .orderBy(col("vec_id"), col("rn"))
 
-  private[llm] def knnGraphDirect(s: SparkSession, d: String): DataFrame = {
+  /** The k-NN edge relation both graded consumers start from
+    * (`emb_knn_graph` presents it sorted; `emb_knn_components`
+    * thresholds + CC over it). The (label, bucket) cell rides along —
+    * constant per vec_id, needed by the per-cell CC. */
+  private[llm] def knnGraph(s: SparkSession, d: String): DataFrame = {
     // cached: the cell self-join reads both sides (in-plan, released
     // per query)
     val n = normed(s, d).join(buckets(s, d, planes = 4), Seq("vec_id"))
@@ -1234,7 +1156,7 @@ object Ann extends QueryGroup {
     // the plane count holds cell population constant as the corpus
     // grows — the family's standing scale rule. Labels are identical to
     // ccLabels' fixed point: min node id per component, a set property.
-    val labeled = knnGraphDirect(s, d).filter(col("cos_sim") >= 0.25)
+    val labeled = knnGraph(s, d).filter(col("cos_sim") >= 0.25)
       .groupBy(col("label"), col("bucket"))
       .agg(collect_list(struct(col("vec_id").as("a"),
         col("neighbor_id").as("b"))).as("es"))
@@ -1274,7 +1196,7 @@ object Ann extends QueryGroup {
 
   override val defs: Seq[(String, QueryDef)] = Seq(
     "emb_knn_components"     -> QueryDef(knnComponents, Some(knnComponentsSql)),
-    "emb_knn_graph"          -> QueryDef(knnGraph, Some(knnGraphSql)),
+    "emb_knn_graph"          -> QueryDef(knnGraphGraded, Some(knnGraphSql)),
     "retrieval_maxsim"       -> QueryDef(maxsim, Some(maxsimSql)),
     "ann_lsh_topk"           -> QueryDef(lshTopk, Some(lshTopkSql)),
     "retrieval_eval_ndcg"    -> QueryDef(evalNdcg, Some(evalNdcgSql)),

@@ -57,37 +57,9 @@ object BpeTrain extends QueryGroup {
       .withColumn("s",
         concat(lit(B), array_join(split(col("word"), "(?<=.)(?=.)"), B), lit(B)))
 
-  /** Disk+session memo of the learned merges table: `bpe_train` AND
-    * `bpe_train_tokens` each re-ran the full TrainRounds Sennrich loop
-    * (a pair-count job + bounded collect + replace barrier per round —
-    * ~20 scheduler-bound jobs) per run. The table is TrainRounds tiny
-    * rows, deterministic under the pinned tie-break. */
-  private[llm] object MergesMemo
-      extends graft.core.DerivedFixture("bpe_merges_memo", "documents") {
-    override protected[graft] def layoutTag: String = s"v1-r$TrainRounds-k1"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit = {
-      val sess = s
-      import sess.implicits._
-      learnDirect(s, dir).toDF("rank", "x", "y", "pair_count")
-        .coalesce(1).write.parquet(target)
-    }
-
-    def merges(s: SparkSession, d: String): Seq[(Long, String, String, Long)] =
-      s.read.parquet(ensure(s, d)).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
-  }
-
-  /** r16 memo policy: graded consumers run the training loop inline;
-    * the memo stays for tests/tools. */
+  /** The learned merges table `bpe_train` and `bpe_train_tokens` both
+    * start from: the TrainRounds-round Sennrich loop, one merge a round. */
   private[llm] def learn(s: SparkSession, d: String): Seq[(Long, String, String, Long)] =
-    learnDirect(s, d)
-
-  /** The un-memoized loop (exposed so `MemoParitySpec` pins memo ≡
-    * direct). */
-  private[llm] def learnDirect(s: SparkSession, d: String): Seq[(Long, String, String, Long)] =
     learnBatched(s, d, TrainRounds, batchK = 1)
 
   /** Greedy token-disjoint selection from candidates already in the

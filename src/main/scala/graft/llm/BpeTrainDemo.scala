@@ -32,13 +32,7 @@ object BpeTrainDemo {
     val corpus = args.sliding(2).collectFirst {
       case Array("--corpus", d) => d }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession(cpus.toInt, "graft-bpe-train-demo")
     val dir = corpus.getOrElse(buildWideCorpus(spark))
     val t0 = System.nanoTime()
     val (merges, rounds) = BpeTrain.learnAdaptive(spark, dir,

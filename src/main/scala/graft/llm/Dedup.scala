@@ -59,31 +59,10 @@ object Dedup extends QueryGroup {
       .withColumn("pos", col("pos0") + 1)
       .select(col("doc_id"), col("pos"), col("sh"))
 
-  /** Session+disk memo of the HASHED shingle table (doc_id, pos, shh) —
-    * the words→shingle→md5 pipeline is the single biggest shared cost of
-    * the text/dedup board (nine queries recomputed it: q30b, lsh_recall,
+  /** The (doc_id, pos, shh) hashed-shingle relation — the words→shingle→
+    * md5 pipeline nine text/dedup queries start from (q30b, lsh_recall,
     * prefix_filter, the capped-set family, winnow, boilerplate and the
-    * three span queries), and it is exactly linear in corpus bytes — the
-    * passes a 100 TB run spends its time in. SimhashPairsMemo economics:
-    * the first consumer in a session pays one corpus scan + a compact
-    * 3-long-column parquet write; the rest read it back. Source-state
-    * keyed, staged + atomic, stale-swept (the DerivedFixture contract).
-    * Raw shingle STRINGS are deliberately not stored: only minhash needs
-    * them (for its second hash) and storing them would make the fixture
-    * corpus-sized instead of 24 bytes/token. */
-  private[llm] object ShingleHashMemo
-      extends graft.core.DerivedFixture("shingle_h48_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      shingleHashes(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The inline (doc_id, pos, shh) hashed-shingle derivation — r16 memo
-    * policy: graded query paths derive from the base tables every run;
-    * [[ShingleHashMemo]] stays for tests/tools only. */
+    * three span queries), derived from the base table on every call. */
   private[llm] def shingleHashes(s: SparkSession, d: String): DataFrame =
     shingles(T.documents(s, d))
       .select(col("doc_id"), col("pos"), h48(col("sh")).as("shh"))
@@ -91,38 +70,18 @@ object Dedup extends QueryGroup {
   /** Covered duplicated positions (doc_id, pos): every word position
     * inside a 5-gram whose distinct-doc df is ≥ 2 — the C4-style span
     * relation `text_dedup_spans` (cut), `text_dup_span_merge` (islands)
-    * and `text_dup_coverage` (count) all start from. Built ON TOP of
-    * [[ShingleHashMemo]], so a cold session pays the corpus scan once
-    * and the df+explode+distinct once, total, for all three. */
-  private[llm] object DupCoverMemo
-      extends graft.core.DerivedFixture("dup_cover_memo", "documents") {
-    // layered on ShingleHashMemo: composing its tag means a shingle-
-    // derivation bump re-derives this fixture too (same source
-    // fingerprint would otherwise serve a stale downstream silently)
-    override protected[graft] def layoutTag: String =
-      s"v1-sh${ShingleHashMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      positionsDirect(s, dir).write.parquet(target)
-
-    /** The un-memoized derivation — the build's body, exposed so
-      * `MemoParitySpec` can pin memo ≡ direct. */
-    private[llm] def positionsDirect(s: SparkSession, dir: String): DataFrame = {
-      // inline shingles (r16 memo policy), cached: the dup-df probe and
-      // the covered-position expansion both read the relation
-      val hsh = shingleHashes(s, dir).cache()
-      val dup = hsh.select(col("doc_id"), col("shh")).distinct()
-        .groupBy(col("shh")).agg(count(lit(1)).as("ndocs"))
-        .filter(col("ndocs") >= 2).select(col("shh"))
-      hsh.join(dup, Seq("shh"), "left_semi")
-        .select(col("doc_id"),
-          explode(sequence(col("pos"), col("pos") + 4)).as("pos"))
-        .distinct()
-    }
-
-    def positions(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
+    * and `text_dup_coverage` (count) all start from. */
+  private[llm] def coveredPositions(s: SparkSession, dir: String): DataFrame = {
+    // cached: the dup-df probe and the covered-position expansion both
+    // read the relation
+    val hsh = shingleHashes(s, dir).cache()
+    val dup = hsh.select(col("doc_id"), col("shh")).distinct()
+      .groupBy(col("shh")).agg(count(lit(1)).as("ndocs"))
+      .filter(col("ndocs") >= 2).select(col("shh"))
+    hsh.join(dup, Seq("shh"), "left_semi")
+      .select(col("doc_id"),
+        explode(sequence(col("pos"), col("pos") + 4)).as("pos"))
+      .distinct()
   }
 
   /** Null-safe squared-norm SQL for embedding oracles: the CASE defers
@@ -367,29 +326,6 @@ object Dedup extends QueryGroup {
         expr(s"stack($bands, $stackExpr) AS (i, minhash)"))
   }
 
-  /** Disk+session memo of the GRADED-parameterization signature table
-    * (doc_id, i, minhash): the shingle→md5→8-band-min pass was re-run
-    * by `dedup_minhash_sig`, `dedup_minhash_pairs` AND
-    * `dedup_lsh_recall` per run — the standing ≥2-consumer rule (the
-    * sig query presents the relation sorted, the KnnGraphMemo shape).
-    * Composes ShingleHashMemo's tag as the shingle-DEFINITION version:
-    * this build re-shingles directly (it needs both md5 halves where
-    * the shingle memo stores only h48), but the definition it must
-    * track is the same one. */
-  private[llm] object MinhashSigMemo
-      extends graft.core.DerivedFixture("minhash_sig_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-b$GradedBands-m$GradedModulus-sh${ShingleHashMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      minhashSigOf(T.documents(s, dir), GradedBands, GradedModulus)
-        .write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
   private def minhashSig(s: SparkSession, d: String): DataFrame =
     minhashSigOf(T.documents(s, d), GradedBands, GradedModulus)
       .orderBy(col("doc_id"), col("i"))
@@ -413,16 +349,9 @@ object Dedup extends QueryGroup {
   /** Band-space-parameterized candidate pairs; see [[minhashSigOf]] for
     * the corpus-scaling rule on `modulus` and `maxBandDf`. */
   private[llm] def minhashPairsOf(docs: DataFrame, bands: Int,
-      modulus: Long, maxBandDf: Long): DataFrame =
-    minhashPairsFromSig(
-      minhashSigOf(docs, bands, modulus).cache(), // self-joined: compute once
-      bands, modulus, maxBandDf)
-
-  /** The banding pipeline over a prebuilt signature table — the graded
-    * path feeds [[MinhashSigMemo]], the arbitrary-docs entry above
-    * rebuilds it (spec fixtures / scale sweeps). */
-  private def minhashPairsFromSig(sig: DataFrame, bands: Int,
       modulus: Long, maxBandDf: Long): DataFrame = {
+    // self-joined: compute once
+    val sig = minhashSigOf(docs, bands, modulus).cache()
     // hot-band guard: a band value shared by f docs emits f² pairs, so one
     // popular signature is quadratic at scale — drop bands with df >
     // maxBandDf (stop-band removal; same cap jaccardPairs applies to stop
@@ -511,8 +440,8 @@ object Dedup extends QueryGroup {
       .withColumn("uni", col("na") + col("nb") - col("inter"))
       .filter(col("inter") * 10 >= col("uni") * 3)
       .withColumn("jaccard_tenths", expr("(inter * 10) div uni"))
-    // inline signatures (r16 memo policy), cached: the hot-band filter
-    // and both self-join sides read them within this one timed query
+    // cached: the hot-band filter and both self-join sides read them
+    // within this one timed query
     val sig = minhashSigOf(T.documents(s, d), GradedBands, GradedModulus)
       .cache()
     val cool = sig.groupBy(col("i"), col("minhash"))
@@ -629,67 +558,23 @@ object Dedup extends QueryGroup {
   // popular band value is otherwise quadratic at 100 TB, the same guard
   // as the minhash band join. 48-bit signatures come from one md5 prefix
   // per word (ANSI-safe longs).
-  /** Session-scoped materialization of the banded-simhash candidate
-    * pairs three queries start from (`dedup_simhash_pairs`,
-    * `dedup_tf_cosine`'s candidate set, `text_edit_distance`'s re-rank
-    * input) — the GraphOps.PairsMemo pattern: the FIRST family query in
-    * a session pays one parquet write of the (doc_a, doc_b, hamming)
-    * rows and the rest read it back. Keyed by the SOURCE FILE STATE of
-    * documents.parquet (never the path), staged + atomically renamed,
-    * stale fingerprints swept — a rewritten corpus or crashed build can
-    * never serve stale/partial pairs. Cold-vs-warm cost disclosed in
-    * SCALING.md next to PairsMemo's. */
-  private[llm] object SimhashPairsMemo
-      extends graft.core.DerivedFixture("simhash_pairs_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      simhashPairsDirect(s, dir)
-        .write.mode("overwrite").parquet(target)
-
-    def pairs(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-
-    /** On-disk bytes of the materialized pair fixture — a PROVABLE size
-      * bound available without a Spark job, used to gate downstream
-      * force-broadcasts of the candidate set (the df cap bounds per-band
-      * fan-out, not the TOTAL pair count, which grows with the corpus). */
-    def bytes(s: SparkSession, d: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-        else f.length
-      walk(new java.io.File(ensure(s, d)))
-    }
-  }
-
-  /** Largest on-disk pair-fixture size for which tf-cosine (and any
-    * other consumer) may FORCE-broadcast the candidate set: 32 MB of
-    * snappy parquet is ~2M (doc_a, doc_b, hamming) rows ≈ ~200 MB as a
-    * broadcast HashedRelation — safe on the standard driver. Above it
-    * the join is left to shuffle/AQE: at SCALING.md's corpus targets the
-    * pair count grows with the corpus and an unconditional broadcast
-    * would OOM the driver. */
-  private[llm] val MaxPairsBroadcastBytes = 32L << 20
-
-  /** The row-count form of the same ceiling, for consumers that derive
-    * the pair set in-plan (no fixture to stat): ~2M (doc_a, doc_b)
-    * rows ≈ the 32 MB parquet bound ≈ ~200 MB as a broadcast
-    * HashedRelation — safe on the standard driver. */
+  /** The row-count ceiling for force-broadcasting a pair set derived
+    * in-plan: ~2M (doc_a, doc_b) rows ≈ ~200 MB as a broadcast
+    * HashedRelation — safe on the standard driver. Above it the join is
+    * left to shuffle/AQE: at SCALING.md's corpus targets the pair count
+    * grows with the corpus and an unconditional broadcast would OOM the
+    * driver. */
   private[llm] val MaxPairsBroadcastRows = 2000000L
-
-  /** The memoized candidate set every consumer reads (same rows as
-    * [[simhashPairsDirect]] — the memo is content-keyed). Unordered: a
-    * parquet read guarantees no row order, so the GRADED row re-sorts
-    * ([[simhashPairsGraded]]); join consumers don't care. */
-  /** r16 memo policy: consumers derive the candidate set inline; the
-    * memo stays for tests/tools. */
-  private[llm] def simhashPairs(s: SparkSession, d: String): DataFrame =
-    simhashPairsDirect(s, d)
 
   private def simhashPairsGraded(s: SparkSession, d: String): DataFrame =
     simhashPairs(s, d).orderBy(col("doc_a"), col("doc_b"))
 
-  private[llm] def simhashPairsDirect(s: SparkSession, d: String): DataFrame = {
+  /** The banded-simhash candidate pairs (doc_a, doc_b, hamming) three
+    * queries start from (`dedup_simhash_pairs`, `dedup_tf_cosine`'s
+    * candidate set, `text_edit_distance`'s re-rank input). Unordered:
+    * the GRADED row re-sorts ([[simhashPairsGraded]]); join consumers
+    * don't care. */
+  private[llm] def simhashPairs(s: SparkSession, d: String): DataFrame = {
     val wh = words(T.documents(s, d)).select(col("doc_id"),
       h48(col("word")).as("h48"))
     // one pass, no bit explode: 48 codegen'd popcount sums per doc; the
@@ -725,10 +610,8 @@ object Dedup extends QueryGroup {
         expr("bit_count(sig_a ^ sig_b)").cast(LongType))
       .filter(col("hamming") <= 5)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
-    // no trailing orderBy: the only caller is the memo's parquet write,
-    // whose consumers either re-sort (the graded row) or join (order
-    // irrelevant) — a forced range-sort shuffle here is pure cold-path
-    // cost on exactly the build the memoization exists to minimize
+    // no trailing orderBy: consumers either re-sort (the graded row) or
+    // join (order irrelevant), so a range-sort shuffle here is pure cost
   }
 
   /** CTE chain through `pairs` (banded simhash candidates) — shared with
@@ -868,10 +751,10 @@ object Dedup extends QueryGroup {
   // doc_id, the text family's standard exchange.
   private def dupCoverage(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
-    // the shared covered-position relation (memoized across the three
-    // span queries); countDistinct(doc_id) >= 2 and distinct-then-count
-    // >= 2 select the identical dup-shingle set
-    val covered = DupCoverMemo.positionsDirect(s, d)
+    // the covered-position relation the three span queries share;
+    // countDistinct(doc_id) >= 2 and distinct-then-count >= 2 select the
+    // identical dup-shingle set
+    val covered = coveredPositions(s, d)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_covered"))
     words(docs).groupBy(col("doc_id")).agg(count(lit(1)).as("n_tokens"))
       .join(covered, Seq("doc_id"), "left")
@@ -921,8 +804,8 @@ object Dedup extends QueryGroup {
       .distinct())
 
   /** The pipeline over a pre-built distinct (doc_id, sh-long) set — the
-    * registry path feeds the memoized table, the arbitrary-docs entry
-    * above rebuilds it (spec fixtures). */
+    * registry path feeds the cached hashed shingles, the arbitrary-docs
+    * entry above rebuilds it (spec fixtures). */
   private def prefixFilterPairsFrom(dsh0: DataFrame): DataFrame = {
     val dsh = dsh0
     val dfT = dsh.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -997,8 +880,8 @@ object Dedup extends QueryGroup {
   }
 
   private def prefixFilter(s: SparkSession, d: String): DataFrame =
-    // inline shingles (r16 memo policy), cached: the df table and the
-    // sorted-array agg both read the distinct set
+    // cached: the df table and the sorted-array agg both read the
+    // distinct set
     prefixFilterPairsFrom(shingleHashes(s, d)
       .select(col("doc_id"), col("shh").as("sh")).distinct().cache())
 
@@ -1032,7 +915,7 @@ object Dedup extends QueryGroup {
     * boilerplate shingles past the cap dilute the ML-side distance).
     * Cached — read up to four times per consumer. */
   private[llm] def cappedShingleSet(s: SparkSession, d: String): DataFrame = {
-    // hashed in the shared memo (the shuffle already carries longs)
+    // hashed shingles (the shuffle already carries longs)
     val dsh = shingleHashes(s, d)
       .select(col("doc_id"), col("shh").as("sh"))
       .distinct()
@@ -1059,36 +942,7 @@ object Dedup extends QueryGroup {
     * was considered and rejected: per-query release would silently strip
     * the memoized DataFrame's caching and every later reuse would
     * recompute uncached, which is worse than honestly rebuilding. */
-  /** r16 memo policy: consumers derive the pair relation inline; the
-    * memo stays for tests/tools. */
-  private[llm] def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardPairsDirect(s, d)
-
-  /** Disk+session memo of the FULL unthresholded capped-set Jaccard
-    * pair relation (doc_a, doc_b, n_common, na, nb, jaccard): the
-    * shared-shingle self-join + intersection count is re-derived by
-    * `dedup_ngram_jaccard` AND `dedup_containment` per run (board
-    * ~2.3 s each), and `GraphOps.PairsMemo`'s build is its ≥ 0.3 slice
-    * — three direct consumers of one expensive relation, the standing
-    * memo rule. Pair count is stop-shingle-cap-bounded (≤ C(50,2) pairs
-    * per shingle — linear in corpus), so the materialization is the
-    * same size class as the per-run intermediate it replaces. */
-  private[llm] object JaccardPairsMemo
-      extends graft.core.DerivedFixture("jaccard_pairs_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-sh${ShingleHashMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      jaccardPairsDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The un-memoized derivation (exposed so `MemoParitySpec` pins
-    * memo ≡ direct). */
-  private[llm] def jaccardPairsDirect(s: SparkSession, d: String): DataFrame = {
+  private[llm] def jaccardPairs(s: SparkSession, d: String): DataFrame = {
     val kept = cappedShingleSet(s, d)
     val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     // r16: pair generation by per-shingle sorted doc arrays instead of
@@ -1568,44 +1422,17 @@ object Dedup extends QueryGroup {
     labels
   }
 
-  /** Disk+session memo of the CONVERGED ≥ 0.5 cluster labels: the
-    * min-label-propagation loop (2+ rounds × several scheduler-bound
-    * jobs each) was re-run by BOTH `dedup_clusters` and
-    * `dedup_keep_best` per bench pass over the identical pair slice —
-    * the standing ≥2-consumer memo rule (the KnnGraphMemo precedent:
-    * the graded queries still add their own population join /
-    * canonical flag / quality argmax on top). Layered on PairsMemo
-    * (composed tag), so a shingle or pair-pipeline bump re-derives. */
-  private[llm] object ClusterLabelsMemo
-      extends graft.core.DerivedFixture("cluster_labels_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-p${GraphOps.PairsMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      clusterLabelsDirect(s, dir).write.parquet(target)
-
-    def labels(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The un-memoized label derivation (exposed so `MemoParitySpec`
-    * pins memo ≡ direct). */
-  private[graft] def clusterLabelsDirect(s: SparkSession, d: String): DataFrame =
+  /** The converged ≥ 0.5 cluster labels (doc_id, cluster) that
+    * `dedup_clusters` and `dedup_keep_best` both start from. */
+  private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
     // cached: ccLabels unions both orientations of the inline pair set
     // before its lineage cut (in-plan; released per query)
-    ccLabels(jaccardPairsDirect(s, d).filter(col("jaccard") >= 0.5)
+    ccLabels(jaccardPairs(s, d).filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b")).cache())
 
   private def dedupClusters(s: SparkSession, d: String): DataFrame = {
-    // the >= 0.5 slice of the session-memoized >= 0.3 pair set (identical
-    // rows to deriving jaccardPairs directly; GraphOps.PairsMemo is
-    // fingerprint-invalidated, so a rewritten corpus re-derives) — the
-    // graph family and the clusters family share ONE shingle pipeline
-    // per session instead of five; the converged labels are themselves
-    // memoized (see ClusterLabelsMemo) because keep_best re-runs them
     val docs = T.documents(s, d).select(col("doc_id"))
-    docs.join(clusterLabelsDirect(s, d), Seq("doc_id"), "left")
+    docs.join(clusterLabels(s, d), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster"))
       .withColumn("is_canonical", col("doc_id") === col("cluster"))
@@ -1796,9 +1623,8 @@ object Dedup extends QueryGroup {
   // norms are exact BIGINT sums; sqrt is IEEE-correctly-rounded; the final
   // cosine is one pinned multiply + divide → bit-identical both engines.
   private def tfCosine(s: SparkSession, d: String): DataFrame = {
-    // the same (doc_id, h48(word), count) relation TermFreqsMemo
-    // materializes — read the memo instead of re-scanning the corpus;
-    // cached because three consumers read it (both dot sides + norms),
+    // the corpus (doc_id, h48(word), count) relation, cached because
+    // three consumers read it (both dot sides + norms),
     // released per query by core.Release.storage like every cache in
     // this family
     val tf = TextStats.corpusTermFreqs(s, d)
@@ -1809,12 +1635,9 @@ object Dedup extends QueryGroup {
     // the banded candidate list is FORCE-broadcast into the tf table
     // when it is provably small (AQE re-deciding this join's build side
     // was the round-12 driver-side outlier class; PlanSpec pins the
-    // shape at graded scale). r16 memo policy: the candidate set
-    // derives inline, so the former fixture-bytes gate becomes a COUNT
-    // of the cached in-plan pair set — one scalar job (the pagerank
-    // nNodes precedent) over rows the dot join reads anyway. `dots`
-    // (one row per candidate pair) is bounded by the same count, so
-    // the same gate lets it broadcast into the doc-sized norm table.
+    // shape at graded scale). `dots` (one row per candidate pair) is
+    // bounded by the same ceiling, so the same gate lets it broadcast
+    // into the doc-sized norm table.
     // Past the bound — pair count grows with the corpus — the hints
     // drop and the joins shuffle.
     // gate input: the PROVABLE pair ceiling docs·bands·cap/2 from one
@@ -1824,7 +1647,7 @@ object Dedup extends QueryGroup {
     val nDocs = T.documents(s, d).count()
     val bcOk = nDocs * 4L * 50L / 2L <= MaxPairsBroadcastRows
     def bc(df: DataFrame): DataFrame = if (bcOk) broadcast(df) else df
-    val dots = bc(simhashPairsDirect(s, d)
+    val dots = bc(simhashPairs(s, d)
         .select(col("doc_a"), col("doc_b")))
       .join(tf.select(col("doc_id").as("doc_a"), col("wh2"), col("c").as("ca")),
         Seq("doc_a"))

@@ -146,10 +146,9 @@ object EmbPca extends QueryGroup {
     * consumer for algebra a single core does in microseconds. Arithmetic
     * is replicated operation-for-operation (same long/BigInt exact
     * products, same single floor/sqrt/divide IEEE chains), so the model
-    * is bit-identical — `MemoParitySpec` pins it against the fixture
-    * built by the former formulation's values, and the oracle replays
-    * the identical chain in SQL. */
-  private[llm] def pcaModelDirect(s: SparkSession, d: String)
+    * is bit-identical, and the oracle replays the identical chain in
+    * SQL. */
+  private[llm] def pcaModel(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import scala.jdk.CollectionConverters._
     val g = quantized(s, d)
@@ -259,41 +258,9 @@ object EmbPca extends QueryGroup {
     (meanDf, vecDf(v1), vecDf(v2), scalars)
   }
 
-  /** Disk+session memo of the spectral model — the `PqModelMemo` move
-    * applied to this family: the gram → c1 → powerIterate → Rayleigh →
-    * deflate → powerIterate chain (many tiny dim²-row jobs whose wall
-    * time tracks scheduler latency, not data) was rebuilt independently
-    * by FIVE consumers (`emb_top_pc`, `emb_top_pc2`, `emb_remove_top_pc`,
-    * `emb_pca_var_explained`, `emb_whiten_top2` — board slots #3 and #5
-    * in round 14). The model is k-row/dim-row output — a tiny parquet —
-    * so the first consumer pays one build and the rest read it back.
-    * [[PowerIters]] joins the layoutTag: changing the iteration count
-    * changes the derivation and must invalidate the fixture. */
-  private object PcaModelFixture
-      extends graft.core.DerivedFixture("emb_pca_model", "embeddings") {
-    override protected[graft] def layoutTag: String = s"v1-p$PowerIters"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit = {
-      val (mean, v1, v2, scalars) = pcaModelDirect(s, dir)
-      mean.write.parquet(s"$target/mean")
-      v1.write.parquet(s"$target/v1")
-      v2.write.parquet(s"$target/v2")
-      scalars.write.parquet(s"$target/scalars")
-    }
-  }
-
-  /** The memoized (mean, v1, v2, scalars) model — identical values to
-    * [[pcaModelDirect]] (BIGINT columns round-trip parquet exactly). */
-  private[llm] def pcaModel(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    // r16 memo policy: graded consumers derive the spectral model
-    // inline; the fixture stays for tests/tools.
-    pcaModelDirect(s, d)
-
   /** Top principal component by [[PowerIters]] rounds of power iteration
-    * on the 1e6-scaled per-n covariance, starting from all-ones — read
-    * from the shared [[pcaModel]] memo. */
+    * on the 1e6-scaled per-n covariance, starting from all-ones — from
+    * the shared [[pcaModel]]. */
   private def topPc(s: SparkSession, d: String): DataFrame = {
     val (mean, v1, _, _) = pcaModel(s, d)
     v1.join(mean, Seq("k"))
@@ -388,8 +355,8 @@ object EmbPca extends QueryGroup {
     * (cast, /1e15, /√(λ̂/1e6)). λ̂ ⩽ 0 (possible for the deflated matrix
     * on a degenerate spectrum) yields a DEFINED null coordinate.
     * Scale shape: the spectral model comes from the shared [[pcaModel]]
-    * memo (one Gramian pass + dim²-row algebra, paid once per source
-    * state); this query's own cost is ONE narrow centered-dot
+    * (one Gramian pass + driver-side dim²-bounded algebra); this
+    * query's own cost is ONE narrow centered-dot
     * aggregation with dim-row broadcasts. */
   private def whitenTop2(s: SparkSession, d: String): DataFrame = {
     val (mean, v1, v2, scalars) = pcaModel(s, d)

@@ -28,79 +28,17 @@ object GraphOps extends QueryGroup {
   private val Scale = 1000000000000L // 1e12 fixed-point
   private val Iters = 3
 
-  /** Session-scoped materialization of the thresholded dup-graph edge
-    * set all three `graph_*` queries start from: the capped-Jaccard
-    * shingle pipeline is the dominant shared cost of the family
-    * (re-derived per query, it was ~60% of each), so the FIRST family
-    * query in a session pays one parquet write of the (doc_a, doc_b)
-    * pairs and the rest read it back — a derived-dataset cache, the
-    * in-session analogue of the persisted `IvfIndex`/`PostingsIndex`
-    * artifacts. Keyed by the SOURCE FILE STATE (name/size/mtime walk of
-    * `documents.parquet`), never the path alone: a rewritten fixture at
-    * the same path re-derives (and sweeps the stale materialization),
-    * so no spec or re-generated corpus can read stale edges
-    * (`GraphPackSpec` asserts both the equality and the invalidation).
-    * Disk, not cache: `Release.storage` between bench queries drops
-    * every block, and the memo must survive it. Cold-vs-warm cost is
-    * disclosed in SCALING.md — the bench board's pagerank time carries
-    * the build, the other two family members read warm. */
-  private[llm] object PairsMemo
-      extends graft.core.DerivedFixture("graph_pairs_memo", "documents") {
-    // the memo keeps the SCORE so every >= 0.3 consumer can slice its
-    // own threshold: the graph family reads the whole set, the clusters
-    // family (dedup_clusters / dedup_keep_best) filters >= 0.5 —
-    // identical rows to a direct derivation either way. DerivedFixture
-    // supplies the source fingerprinting, the staged atomic build, and
-    // the stale-sibling sweep — so a JVM restart no longer orphans the
-    // previous fingerprint's directory (it is swept on the next
-    // re-derive of the same source-dir key), and a crashed build can
-    // never be mistaken for a complete memo.
-    // layered on JaccardPairsMemo (r15 — the build is now its ≥ 0.3
-    // slice, whose own tag composes ShingleHashMemo's): the composed
-    // tag re-derives this fixture on an upstream bump at either layer
-    override protected[graft] def layoutTag: String =
-      s"v2-jp${Dedup.JaccardPairsMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      Dedup.jaccardPairs(s, dir).filter(col("jaccard") >= 0.3)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .write.mode("overwrite").parquet(target)
-
-    def pairs(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d)).select(col("doc_a"), col("doc_b"))
-
-    /** The >= `minJaccard` slice of the memoized pair set (minJaccard must
-      * be >= the memo's own 0.3 floor or the slice would silently miss
-      * pairs the memo never stored). */
-    def pairsAtLeast(s: SparkSession, d: String, minJaccard: Double): DataFrame = {
-      require(minJaccard >= 0.3, s"memo stores jaccard >= 0.3 only; got $minJaccard")
-      scoredPairsAtLeast(s, d, minJaccard).select(col("doc_a"), col("doc_b"))
-    }
-
-    /** Same slice WITH the stored exact-Jaccard score — the raw double
-      * [[Dedup.jaccardPairs]] computed (parquet round-trips it exactly),
-      * for consumers that grade or rank on the value (`dedup_minhash_ml`'s
-      * exact side). */
-    def scoredPairsAtLeast(s: SparkSession, d: String,
-        minJaccard: Double): DataFrame = {
-      require(minJaccard >= 0.3, s"memo stores jaccard >= 0.3 only; got $minJaccard")
-      s.read.parquet(ensure(s, d)).filter(col("jaccard") >= minJaccard)
-    }
-  }
-
-  /** The >= 0.3 dup-graph edge set derived INLINE (r16 memo policy:
-    * graded paths never read persisted fixtures; [[PairsMemo]] stays
-    * for tests/tools), CACHED because every family query reads it 2-3
-    * times (both-orientation unions / degree + edge builds) before its
+  /** The >= 0.3 dup-graph edge set every `graph_*` query starts from,
+    * CACHED because every family query reads it 2-3 times
+    * (both-orientation unions / degree + edge builds) before its
     * Materialize.cut — an in-plan cache the harness releases after the
     * query. */
-  private def pairsInline(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPairsDirect(s, d).filter(col("jaccard") >= 0.3)
+  private def edgePairs(s: SparkSession, d: String): DataFrame =
+    Dedup.jaccardPairs(s, d).filter(col("jaccard") >= 0.3)
       .select(col("doc_a"), col("doc_b")).cache()
 
   private def pagerank(s: SparkSession, d: String): DataFrame = {
-    val pairs = pairsInline(s, d)
+    val pairs = edgePairs(s, d)
     // read 3× (outdeg + every iteration); materialize the pair pipeline
     // once — reliably checkpointed in cluster mode (Materialize.cut)
     val edges = Materialize.cut(pairs
@@ -192,7 +130,7 @@ object GraphOps extends QueryGroup {
   // edge set is materialized once ([[Materialize.cut]]) since the wedge
   // join reads it from both sides plus the closing probe.
   private def triangles(s: SparkSession, d: String): DataFrame = {
-    val pairs = pairsInline(s, d)
+    val pairs = edgePairs(s, d)
     val deg = pairs.select(col("doc_a").as("node"))
       .union(pairs.select(col("doc_b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("dg"))
@@ -263,7 +201,7 @@ object GraphOps extends QueryGroup {
     // union — which would recompute the whole shingle pipeline twice
     // (measured 5.3 s vs 4.7 s at sf0.1 — the saving grows with the
     // shingle pipeline's share of the cost)
-    val deg = pairsInline(s, d)
+    val deg = edgePairs(s, d)
       .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
     val tot = deg.agg(count(lit(1)).as("n_nodes"))
@@ -310,7 +248,7 @@ object GraphOps extends QueryGroup {
   private def kcore(s: SparkSession, d: String): DataFrame = {
     val K = 2
     val Rounds = 4
-    val pairs = pairsInline(s, d)
+    val pairs = edgePairs(s, d)
     var edges = Materialize.cut(pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -373,7 +311,7 @@ object GraphOps extends QueryGroup {
   // node-bounded rank window; per-round state is Materialize.cut (the
   // iterative-loop rule). Rounds are fixed, lineage bounded.
   private def lpaCommunities(s: SparkSession, d: String): DataFrame = {
-    val pairs = pairsInline(s, d)
+    val pairs = edgePairs(s, d)
     val edges = Materialize.cut(pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -451,7 +389,7 @@ object GraphOps extends QueryGroup {
     * is a broadcast. Each term is one fixed IEEE chain per community;
     * ties/order never matter (no cross-community arithmetic). */
   private def modularity(s: SparkSession, d: String): DataFrame = {
-    val pairs = pairsInline(s, d)
+    val pairs = edgePairs(s, d)
     val edges = Materialize.cut(pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))

@@ -18,38 +18,6 @@ import graft.core.{QueryDef, QueryGroup, Tables => T}
   */
 object MlLsh extends QueryGroup {
 
-  /** Disk+session memo of [[minhashLshPairsDirect]] — the round-14
-    * board's #2 slot rebuilt the scan→shingle→collect_set→HashingTF
-    * chain, the model fit and the self-join per run, yet the output is
-    * DETERMINISTIC under the fixed seed (murmur3 features, seeded hash
-    * coefficients) and tiny (candidate pairs + a double distance —
-    * parquet-exact). Keyed per threshold in the fixture ROOT (the spec
-    * recall checks run 0.7 beside the registry's 0.4), layered on
-    * ShingleHashMemo via the capped-set featurization. */
-  private final class MlPairsFixture(maxDist: Double)
-      extends graft.core.DerivedFixture(
-        s"ml_lsh_pairs/d${math.round(maxDist * 100)}", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-sh${Dedup.ShingleHashMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      minhashLshPairsDirect(s, dir, maxDist).write.parquet(target)
-  }
-
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[Long, MlPairsFixture]
-
-  /** Memoized ML candidate pairs — identical rows to
-    * [[minhashLshPairsDirect]] (`MemoParitySpec` pins it). */
-  def minhashLshPairs(s: SparkSession, d: String,
-      maxJaccardDist: Double = 0.7): DataFrame = {
-    val key = math.round(maxJaccardDist * 100)
-    s.read.parquet(pairsMemo
-      .getOrElseUpdate(key, new MlPairsFixture(maxJaccardDist))
-      .ensure(s, d))
-  }
-
   /** Raw ML candidate pairs at `maxJaccardDist` (dist = 1 − Jaccard over
     * the hashed feature sets).
     *
@@ -59,8 +27,8 @@ object MlLsh extends QueryGroup {
     * exact side computes — on uncapped sets, boilerplate shingles past
     * the df-cap dilute the ML distance and a capped-Jaccard ≥ 0.8 pair
     * could sit beyond the join threshold and silently drop. */
-  private[llm] def minhashLshPairsDirect(s: SparkSession, d: String,
-      maxJaccardDist: Double): DataFrame = {
+  def minhashLshPairs(s: SparkSession, d: String,
+      maxJaccardDist: Double = 0.7): DataFrame = {
     val docsSh = Dedup.cappedShingleSet(s, d)
       .groupBy(col("doc_id"))
       .agg(collect_set(col("sh").cast("string")).as("shs"))
@@ -97,11 +65,11 @@ object MlLsh extends QueryGroup {
     * flips `ml_dist_ok` (|ML sim − exact capped Jaccard| ≤ 0.1 — slack
     * covers 2^18 feature-hash collisions). */
   def minhashLshVerified(s: SparkSession, d: String): DataFrame = {
-    // r16 memo policy: both sides derive inline within this one timed
-    // query — the ML fit/self-join and the exact capped-Jaccard pairs
-    // (the capped shingle set underneath is cached by its own helper)
-    val ml = minhashLshPairsDirect(s, d, maxJaccardDist = 0.4)
-    val exact = Dedup.jaccardPairsDirect(s, d)
+    // both sides derive within this one timed query — the ML
+    // fit/self-join and the exact capped-Jaccard pairs (the capped
+    // shingle set underneath is cached by its own helper)
+    val ml = minhashLshPairs(s, d, maxJaccardDist = 0.4)
+    val exact = Dedup.jaccardPairs(s, d)
       .filter(col("jaccard") >= 0.8)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
     exact.join(ml, Seq("doc_a", "doc_b"))

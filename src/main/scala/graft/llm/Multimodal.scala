@@ -1394,32 +1394,10 @@ object Multimodal {
   /** Unordered near-dup pair table (shared by the graded pairs query and
     * the connected-components grouping) — the graded pin of
     * [[phashPairsOf]]: 16-bit bands, the [[PhashBandCap]]/
-    * [[PhashHammingMax]] knobs. r15: materialized once per knob set
-    * (the ≥2-consumer memo rule) — both consumers re-ran the decode →
-    * aHash → banded-Hamming pipeline per run; the fixture is
-    * source-independent, so the knobs key the path (commitFixture's
-    * atomic-rename rule, like the media fixtures themselves). */
-  object PhashPairsFixture {
-    val path: String = graft.core.Fixtures.path(
-      s"phash_pairs_b16c${PhashBandCap}h$PhashHammingMax.parquet")
-    def ensure(spark: SparkSession): String = synchronized {
-      if (!new java.io.File(path).exists())
-        commitFixture(path)(tmp => phashPairsDirect(spark)
-          .repartition(1).write.mode("overwrite").parquet(tmp))
-      path
-    }
-  }
-
-  /** The un-memoized pair derivation (exposed so `MemoParitySpec` pins
-    * fixture ≡ direct). */
-  private[llm] def phashPairsDirect(spark: SparkSession): DataFrame =
+    * [[PhashHammingMax]] knobs. */
+  private[llm] def phashPairsTable(spark: SparkSession): DataFrame =
     phashPairsOf(phashTable(spark), bandBits = 16, cap = PhashBandCap,
       hammingMax = PhashHammingMax)
-
-  // r16 memo policy: graded consumers derive the pair table inline;
-  // the fixture stays for tests/tools.
-  private def phashPairsTable(spark: SparkSession): DataFrame =
-    phashPairsDirect(spark)
 
   /** Band-width-parameterized banded Hamming pair join (SCALING.md: the
     * phash analogue of the minhash modulus rule). `bandBits` fixes the

@@ -210,24 +210,20 @@ object Pipeline extends QueryGroup {
     // n_words on whitespace-heavy docs, let '' become top_word, and built
     // bigrams like 'x ' — the signal disagreed with every other token
     // count in the repo for the same document.
-    // Both halves ride the shared per-doc token memos now: the word
-    // counts ARE TermFreqsMemo's rows, and the per-doc bigram counts ARE
-    // BigramCountsMemo's (distinct (h1,h2) pairs ≡ distinct bigrams —
-    // words cannot contain the split character, so the pair is a
-    // bijective encoding of the concatenated form the oracle used to
+    // Both halves derive from ONE cached pass over the positioned token
+    // stream: the word counts are its (doc_id, wh) agg, the per-doc
+    // bigram counts its lead() window (distinct (h1,h2) pairs ≡ distinct
+    // bigrams — words cannot contain the split character, so the pair is
+    // a bijective encoding of the concatenated form the oracle used to
     // hash; the oracle now mirrors the pair derivation exactly)
-    // r16 memo policy: both halves derive inline, from ONE cached pass
-    // over the positioned token stream (the word counts are its
-    // (doc_id, wh) agg; the bigram counts its lead() window — identical
-    // values to the former memo reads)
-    val pos = TextStats.BigramCountsMemo.positionedHashes(s, d).cache()
+    val pos = TextStats.positionedHashes(s, d).cache()
     val wc = pos.groupBy(col("doc_id"), col("wh"))
       .agg(count(lit(1)).as("c"))
     val wordAgg = wc.groupBy(col("doc_id")).agg(
       sum(col("c")).cast(LongType).as("n_words"),
       count(lit(1)).as("n_uniq_words"),
       max(col("c")).as("top_word_n"))
-    val bc = TextStats.BigramCountsMemo.bigramCountsFrom(pos)
+    val bc = TextStats.bigramCountsFrom(pos)
     val biAgg = bc.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_uniq_bigrams"),
       max(col("c")).as("top_bigram_n"))
@@ -245,7 +241,7 @@ object Pipeline extends QueryGroup {
       .orderBy(col("doc_id"))
   }
 
-  // bigram derivation mirrors BigramCountsMemo: per-word 48-bit hashes
+  // bigram derivation mirrors TextStats.bigramCounts: per-word 48-bit hashes
   // paired by a lead() window over filtered positions — the pair is a
   // bijective encoding of the old concatenated "w1 w2" form (words
   // cannot contain the split character)
@@ -284,8 +280,8 @@ object Pipeline extends QueryGroup {
   // df aggregation and the 1:N df join runs on 8-byte keys (a truly hot
   // boilerplate shingle is AQE-skew-split, same guard as the join family).
   private def boilerplate(s: SparkSession, d: String): DataFrame = {
-    // inline shingles (r16 memo policy), cached: the df aggregation and
-    // the coverage join both read the distinct set
+    // cached: the df aggregation and the coverage join both read the
+    // distinct set
     val dsh = Dedup.shingleHashes(s, d)
       .select(col("doc_id"), col("shh")).distinct().cache()
     val dfc = dsh.groupBy(col("shh")).agg(count(lit(1)).as("df"))
@@ -541,30 +537,10 @@ object Pipeline extends QueryGroup {
       |FROM documents ORDER BY doc_id""".stripMargin
   }
 
-  /** Disk+session memo of the per-doc decontamination report — the
-    * 8-gram shingle pipeline ran THREE times per board (the graded
-    * `decontaminate_ngram`, then again inside `curate_verdict` and
-    * `curate_funnel`'s verdict). ShingleHashMemo economics; unordered
-    * (parquet), the graded query re-sorts. */
-  private[llm] object DecontamMemo
-      extends graft.core.DerivedFixture("decontam_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      decontaminateDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** r16 memo policy: graded consumers derive the report inline; the
-    * memo stays for tests/tools. */
-  private def decontaminate(s: SparkSession, d: String): DataFrame =
-    decontaminateDirect(s, d)
-
   private def decontaminateGraded(s: SparkSession, d: String): DataFrame =
     decontaminate(s, d).orderBy(col("doc_id"))
 
-  private[llm] def decontaminateDirect(s: SparkSession, d: String): DataFrame = {
+  private[llm] def decontaminate(s: SparkSession, d: String): DataFrame = {
     val sh8 = shingle8(T.documents(s, d))
       .cache() // read three times (bench build, overlap probe, totals)
     val bench = sh8.filter(col("doc_id") % benchMod === 0)
@@ -648,10 +624,9 @@ object Pipeline extends QueryGroup {
         posexplode(filter(split(col("text"), " "), w => w =!= ""))
           .as(Seq("pos0", "word")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("word"))
-    // the shared covered-position relation (memoized across the three
-    // span queries — text_dup_coverage / text_dup_span_merge use the
-    // identical rows)
-    val cov = Dedup.DupCoverMemo.positionsDirect(s, d)
+    // the covered-position relation the three span queries share
+    // (text_dup_coverage / text_dup_span_merge use the identical rows)
+    val cov = Dedup.coveredPositions(s, d)
     val kept = wrd.join(cov, Seq("doc_id", "pos"), "left_anti")
     val agg = kept.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_kept"),
@@ -728,7 +703,7 @@ object Pipeline extends QueryGroup {
   // agg on 48-bit shingle keys, dup side distinct → 1 row/key); the
   // islands window and both rollups all ride ONE doc_id exchange.
   private def dupSpanMerge(s: SparkSession, d: String): DataFrame = {
-    val cov = Dedup.DupCoverMemo.positionsDirect(s, d)
+    val cov = Dedup.coveredPositions(s, d)
     val spans = cov
       .withColumn("grp",
         col("pos") - row_number()
@@ -854,30 +829,12 @@ object Pipeline extends QueryGroup {
       .select(col("doc_id"), col("n_words"), col("uniq_frac"),
         col("keep"), col("reasons"))
 
-  /** Disk+session memo of the verdict relation: `curate_funnel` is the
-    * whole verdict derivation plus a 4-row aggregate, so without the
-    * memo the board paid the decontaminate+wordStats+canon composition
-    * twice. Unordered; the graded query re-sorts. */
-  private[llm] object VerdictMemo
-      extends graft.core.DerivedFixture("curate_verdict_memo", "documents") {
-    // layered on DecontamMemo (the build's decontaminate() reads it):
-    // composing the upstream tag makes a decontamination bump
-    // invalidate this fixture automatically
-    override protected[graft] def layoutTag: String =
-      s"v1-dc${DecontamMemo.layoutTag}"
+  private def curateVerdictGraded(s: SparkSession, d: String): DataFrame =
+    curateVerdict(s, d).orderBy(col("doc_id"))
 
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      curateVerdictDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  private def curateVerdict(s: SparkSession, d: String): DataFrame =
-    curateVerdictDirect(s, d).orderBy(col("doc_id"))
-
-  private[llm] def curateVerdictDirect(s: SparkSession, d: String): DataFrame = {
+  /** The unordered verdict relation: `curate_verdict` re-sorts it and
+    * `curate_funnel` aggregates it. */
+  private[llm] def curateVerdict(s: SparkSession, d: String): DataFrame = {
     val rep = wordStats(T.documents(s, d))
     val dec = decontaminate(s, d).select(col("doc_id"), col("is_clean"))
     val canon = T.documents(s, d)
@@ -946,7 +903,7 @@ object Pipeline extends QueryGroup {
 
   private def curateFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val firstFail = curateVerdictDirect(s, d) // unordered: aggregate-only
+    val firstFail = curateVerdict(s, d) // unordered: aggregate-only
       .select(when(!col("keep"), split(col("reasons"), ",")(0))
         .as("first_fail"))
     val drops = firstFail.groupBy(col("first_fail"))
@@ -1626,7 +1583,7 @@ object Pipeline extends QueryGroup {
     // r15: the token stream was re-exploded SIX times (two bucket
     // counts, two totals, the bucket domain, the final weight join) —
     // the sweep's worst absolute. The per-(doc, wh, c) relation the
-    // explode fed is exactly TermFreqsMemo (same h48 hash, so
+    // explode fed is exactly corpusTermFreqs (same h48 hash, so
     // wh % B IS the bucket); doc attributes join back from the
     // documents table (broadcast — doc-count-sized), token counts
     // become Σc, and one Materialize.cut serves the six consumers
@@ -1712,7 +1669,7 @@ object Pipeline extends QueryGroup {
     "text_pii_redact" -> QueryDef(piiRedact, Some(piiRedactSql)),
     "text_dedup_spans" -> QueryDef(dedupSpans, Some(dedupSpansSql)),
     "text_dup_span_merge" -> QueryDef(dupSpanMerge, Some(dupSpanMergeSql)),
-    "curate_verdict" -> QueryDef(curateVerdict, Some(curateVerdictSql)),
+    "curate_verdict" -> QueryDef(curateVerdictGraded, Some(curateVerdictSql)),
     "curate_funnel" -> QueryDef(curateFunnel, Some(curateFunnelSql)),
     "ingest_dedup_incremental" -> QueryDef(ingestDedup, Some(ingestDedupSql)),
     "sample_importance" -> QueryDef(sampleImportance, Some(sampleImportanceSql)),

@@ -50,53 +50,16 @@ object Subword extends QueryGroup {
     Dedup.words(T.documents(s, d))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
-  /** Disk+session memo of the piece-score table (piece, cnt, iscore):
-    * the every-substring explode + aggregation over the distinct-word
-    * vocabulary was re-run by ALL FOUR unigram queries per run — the
-    * standing ≥2-consumer memo rule. Vocabulary-bounded rows. */
-  private[llm] object PieceScoresMemo
-      extends graft.core.DerivedFixture("unigram_piece_scores_memo",
-        "documents") {
-    override protected[graft] def layoutTag: String = s"v1-l$MaxPieceLen"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      pieceScores(wordFreq(s, dir)).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** Disk+session memo of the ROUND-0 Viterbi segmentation per distinct
-    * word — (word, freq, score0, np0, pieces): the broadcast-map DP is
-    * deterministic (pinned tie-break), and `text_unigram_segment`,
-    * `unigram_em_round` AND `unigram_prune` each re-collected the piece
-    * map and re-ran it per run. The sharded variant deliberately stays
-    * off this memo's broadcast construction — its contract is the
-    * no-collect path. Layered on PieceScoresMemo (composed tag). */
-  private[llm] object Seg0Memo
-      extends graft.core.DerivedFixture("unigram_seg0_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-w$MaxWordLen-ps${PieceScoresMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      seg0Direct(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The un-memoized round-0 segmentation (exposed so `MemoParitySpec`
-    * pins memo ≡ direct): one cut word-frequency pass feeds both the
+  /** The round-0 Viterbi segmentation per distinct word — (word, freq,
+    * score0, np0, pieces): one cut word-frequency pass feeds both the
     * piece table and the DP word list. */
-  private[llm] def seg0Direct(s: SparkSession, d: String): DataFrame = {
+  private[llm] def seg0(s: SparkSession, d: String): DataFrame = {
     val wf = graft.core.Materialize.cut(wordFreq(s, d))
     seg0From(s, wf, pieceScores(wf))
   }
 
   /** The round-0 DP over a prebuilt (cut) word-frequency table and piece
-    * table — shared by [[seg0Direct]] and the query paths that also need
+    * table — shared by [[seg0]] and the query paths that also need
     * `ps0` as a DataFrame (so one derivation serves both uses). */
   private[llm] def seg0From(s: SparkSession, wf: DataFrame,
       ps0: DataFrame): DataFrame = {
@@ -187,8 +150,7 @@ object Subword extends QueryGroup {
     * division). Wordless docs surface with zero counts and a NULL
     * ratio. */
   private def unigramSegment(s: SparkSession, d: String): DataFrame = {
-    // r16 memo policy: the round-0 DP derives inline (guards included)
-    val seg = seg0Direct(s, d)
+    val seg = seg0(s, d)
       .select(col("word"), col("score0").as("seg_score"), col("np0").as("np"))
     val perDoc = Dedup.words(T.documents(s, d))
       .join(broadcast(seg), Seq("word"))
@@ -359,11 +321,11 @@ object Subword extends QueryGroup {
     * usage aggregation. */
   private def unigramEmRound(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // r16 memo policy: round-0 DP + piece table derive inline from ONE
-    // cut word-frequency pass; ps0 is cached (the M-step join reads it
-    // as a DataFrame and the DP collects it) and seg0 is cached (the
-    // usage counts, the r0 stats and the second segmentation's word
-    // list all read it) — in-plan caches, released per query
+    // round-0 DP + piece table derive from ONE cut word-frequency pass;
+    // ps0 is cached (the M-step join reads it as a DataFrame and the DP
+    // collects it) and seg0 is cached (the usage counts, the r0 stats
+    // and the second segmentation's word list all read it) — in-plan
+    // caches, released per query
     val wfc = graft.core.Materialize.cut(wordFreq(s, d))
     val ps0 = pieceScores(wfc).cache()
     val seg0 = seg0From(s, wfc, ps0).cache()
@@ -429,8 +391,8 @@ object Subword extends QueryGroup {
     * broadcast DP. */
   private def unigramPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // r16 memo policy: round-0 paths + piece table derive inline from
-    // ONE cut word-frequency pass (caches as in unigram_em_round)
+    // round-0 paths + piece table derive from ONE cut word-frequency
+    // pass (caches as in unigram_em_round)
     val wfc = graft.core.Materialize.cut(wordFreq(s, d))
     val ps0 = pieceScores(wfc).cache()
     val seg0 = seg0From(s, wfc, ps0).cache()
@@ -531,8 +493,8 @@ object Subword extends QueryGroup {
     require(tooLong == 0,
       s"$tooLong words exceed the $MaxWordLen-char DP unroll — " +
         "raise MaxWordLen (and the oracle's staged CTEs) for this corpus")
-    // piece table derived inline from the already-cut word frequencies
-    // (r16 memo policy) — still no driver map: only the DRIVER-map
+    // piece table derived from the already-cut word frequencies — still
+    // no driver map: only the DRIVER-map
     // construction is what this variant documents living without
     val ps = pieceScores(wf).select(col("piece"), col("iscore"))
     // best[j, i) over single pieces: v = iscore·64 − 1 (the key delta)

@@ -389,8 +389,8 @@ object TextStats extends QueryGroup {
   // ever outgrows broadcast, the build side is unique per key, which is
   // exactly the shape AQE's skew-split handles.
   private def perplexity(s: SparkSession, d: String): DataFrame = {
-    // inline tf (r16 memo policy), cached: the vocab model and the
-    // scoring join both read it within this one timed query
+    // cached: the vocab model and the scoring join both read it within
+    // this one timed query
     val tf = corpusTermFreqs(s, d).cache()
     val voc = tf.groupBy(col("wh")).agg(sum(col("c")).cast(LongType).as("cw"))
     val n = voc.agg(sum(col("cw")).cast(LongType).as("nt"))
@@ -446,50 +446,36 @@ object TextStats extends QueryGroup {
   // rule); per-doc sums are exact decimals and the final /n is one IEEE
   // division. Docs with <2 words have no bigrams and are absent —
   // unscorable, like the tfidf family's empty docs.
-  /** Disk+session memo of the per-doc bigram counts (doc_id, h1, h2, c)
-    * — `text_bigram_lm` and `text_kneser_ney` both start from the
-    * identical lead()-window aggregation over the positioned token
-    * stream (the round-12 plan-flip surface; a parquet read is an even
-    * stronger plan pin than the Materialize.cut it replaces). */
-  private[llm] object BigramCountsMemo
-      extends graft.core.DerivedFixture("bigram_counts_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      tableDirect(s, dir).write.parquet(target)
+  /** The positioned 48-bit-hashed token stream the bigram window runs
+    * over — exposed so consumers can share ONE corpus scan between the
+    * bigram counts and a unigram aggregation. */
+  private[llm] def positionedHashes(s: SparkSession, dir: String): DataFrame =
+    words(T.documents(s, dir))
+      .select(col("doc_id"), col("pos"), Dedup.h48(col("word")).as("wh"))
 
-    /** The positioned 48-bit-hashed token stream the bigram window runs
-      * over — exposed so consumers can share ONE corpus scan between the
-      * bigram counts and a unigram aggregation. */
-    private[llm] def positionedHashes(s: SparkSession, dir: String): DataFrame =
-      words(T.documents(s, dir))
-        .select(col("doc_id"), col("pos"), Dedup.h48(col("word")).as("wh"))
-
-    /** The bigram-count window+agg over a prebuilt positioned stream. */
-    private[llm] def bigramCountsFrom(pos: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      pos.withColumn("wh2", lead(col("wh"), 1).over(w))
-        .filter(col("wh2").isNotNull)
-        .groupBy(col("doc_id"), col("wh").as("h1"), col("wh2").as("h2"))
-        .agg(count(lit(1)).as("c"))
-    }
-
-    /** The un-memoized derivation — the build's body, exposed so
-      * `MemoParitySpec` can pin memo ≡ direct. */
-    private[llm] def tableDirect(s: SparkSession, dir: String): DataFrame =
-      bigramCountsFrom(positionedHashes(s, dir))
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
+  /** The bigram-count window+agg over a prebuilt positioned stream. */
+  private[llm] def bigramCountsFrom(pos: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    pos.withColumn("wh2", lead(col("wh"), 1).over(w))
+      .filter(col("wh2").isNotNull)
+      .groupBy(col("doc_id"), col("wh").as("h1"), col("wh2").as("h2"))
+      .agg(count(lit(1)).as("c"))
   }
 
+  /** The per-doc bigram counts (doc_id, h1, h2, c) — `text_bigram_lm`
+    * and `text_kneser_ney` both start from this lead()-window
+    * aggregation over the positioned token stream. */
+  private[llm] def bigramCounts(s: SparkSession, dir: String): DataFrame =
+    bigramCountsFrom(positionedHashes(s, dir))
+
   private def bigramLm(s: SparkSession, d: String): DataFrame = {
-    // r16 memo policy: both the bigram counts and the unigram counts
-    // derive inline, from ONE cached pass over the positioned token
-    // stream (the bigram window and the unigram agg share the scan;
-    // count(*) per wh over the stream ≡ Σ per-doc termFreqs c). The
-    // cache is in-plan — released by the harness after the query.
-    val pos = BigramCountsMemo.positionedHashes(s, d).cache()
-    val bg = BigramCountsMemo.bigramCountsFrom(pos).cache()
+    // both the bigram counts and the unigram counts derive from ONE
+    // cached pass over the positioned token stream (the bigram window
+    // and the unigram agg share the scan; count(*) per wh over the
+    // stream ≡ Σ per-doc termFreqs c). The cache is in-plan — released
+    // by the harness after the query.
+    val pos = positionedHashes(s, d).cache()
+    val bg = bigramCountsFrom(pos).cache()
     val bgModel = bg.groupBy(col("h1"), col("h2"))
       .agg(sum(col("c")).cast(LongType).as("cb"))
     // |V|-bounded; cut so its three consumers (two model joins + the
@@ -572,10 +558,10 @@ object TextStats extends QueryGroup {
   // and the final /n is one IEEE division. Docs with <2 words are
   // absent (unscorable).
   private def kneserNey(s: SparkSession, d: String): DataFrame = {
-    // r16 memo policy: inline derivation; cached because bg feeds both
-    // the model aggregation and the final scoring join (in-plan cache,
-    // released by the harness after the query)
-    val bg = BigramCountsMemo.tableDirect(s, d).cache()
+    // cached because bg feeds both the model aggregation and the final
+    // scoring join (in-plan cache, released by the harness after the
+    // query)
+    val bg = bigramCounts(s, d).cache()
     val bgModel = graft.core.Materialize.cut(
       bg.groupBy(col("h1"), col("h2"))
         .agg(sum(col("c")).cast(LongType).as("cb")))
@@ -719,82 +705,13 @@ object TextStats extends QueryGroup {
       .select(col("doc_id"), Dedup.h48(col("word")).as("wh"))
       .groupBy(col("doc_id"), col("wh")).agg(count(lit(1)).as("c"))
 
-  /** Disk+session memo of [[termFreqs]] over the CORPUS table — the
-    * per-doc token substrate the linear text tail kept re-deriving:
-    * `text_perplexity`, `text_entropy`, `text_classifier`,
-    * `retrieval_prf`, `text_repetition`'s word half and the curation
-    * decile signals each paid the identical corpus scan → explode →
-    * (doc_id, wh) hash agg. Rows are all BIGINTs (parquet-exact);
-    * ShingleHashMemo economics — the first consumer in a session pays
-    * one corpus pass, the rest read 24-byte rows back. Arbitrary-docs
-    * callers (streaming batches, probe slices) keep using [[termFreqs]]
-    * directly. */
-  private[llm] object TermFreqsMemo
-      extends graft.core.DerivedFixture("term_freqs_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      termFreqs(T.documents(s, dir)).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The corpus term-frequency relation, derived inline from the base
-    * table. r16 memo policy: graded query paths never read persisted
-    * derived fixtures — every bench/oracle invocation computes from the
-    * parquet inputs; [[TermFreqsMemo]] stays for tests/tools only. */
+  /** The corpus term-frequency relation, derived from the base table —
+    * the per-doc token substrate of `text_perplexity`, `text_entropy`,
+    * `text_classifier`, `retrieval_prf`, `text_repetition`'s word half
+    * and the curation decile signals. Arbitrary-docs callers (streaming
+    * batches, probe slices) use [[termFreqs]] directly. */
   private[llm] def corpusTermFreqs(s: SparkSession, d: String): DataFrame =
     termFreqs(T.documents(s, d))
-
-  /** Disk+session memo of the BM25 "model" — the four derived tables
-    * every retrieval pass re-aggregated from the corpus tf at query
-    * time: per-doc lengths (doc_id, dl), the 1-row corpus stats
-    * (n_docs, avgdl), the document frequencies (wh, df), and the
-    * probes' top-3-idf query terms (q_doc, wh, idf). All exact-typed
-    * (BIGINT counts, DECIMAL(18,6) idf; avgdl is ONE IEEE division
-    * that round-trips parquet bit-for-bit). Layered on
-    * [[TermFreqsMemo]] — the composed layoutTag re-derives on a tf
-    * bump. `retrieval_prf` was the consumer that paid this whole
-    * derivation INSIDE its query (sf1 worst-absolute, 11.3 s): with
-    * the model read back, its query-time work is the feedback mining
-    * join plus the one expanded scoring pass. */
-  private[llm] object Bm25ModelMemo
-      extends graft.core.DerivedFixture("bm25_model_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-tf${TermFreqsMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit = {
-      val (dl, st, df_, qidf) = bm25ModelDirect(s, dir)
-      dl.write.parquet(s"$target/dl")
-      st.write.parquet(s"$target/st")
-      df_.write.parquet(s"$target/df")
-      qidf.write.parquet(s"$target/qidf")
-    }
-
-    def parts(s: SparkSession, d: String)
-        : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-      val p = ensure(s, d)
-      (s.read.parquet(s"$p/dl"), s.read.parquet(s"$p/st"),
-        s.read.parquet(s"$p/df"), s.read.parquet(s"$p/qidf"))
-    }
-  }
-
-  /** The un-memoized model derivation (dl, stats, df, query terms) —
-    * exactly the four tables `bm25ScoresDirect` builds inline; exposed
-    * so `MemoParitySpec` can pin memo ≡ direct. */
-  private[llm] def bm25ModelDirect(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val tf = corpusTermFreqs(s, d)
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("c")).cast(LongType).as("dl"))
-    val st = dl.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast(LongType).cast(DoubleType) /
-        count(lit(1)).cast(DoubleType)).as("avgdl"))
-    val df_ = tf.groupBy(col("wh")).agg(count(lit(1)).as("df"))
-    val qidf = topIdfTerms(tf.filter(isProbe(col("doc_id"))), df_,
-      st.select(col("n_docs")))
-    (dl, st, df_, qidf)
-  }
 
   /** The retrieval probe rule, ONE definition for every surface (inline
     * BM25, RRF's two halves, the persisted postings index, the RAG demo):
@@ -859,65 +776,10 @@ object TextStats extends QueryGroup {
       .agg(sum(col("contrib")).as("score_dec"),
         count(lit(1)).cast(LongType).as("n_terms"))
 
-  /** Disk+session memo of the first-pass BM25 score table — THREE
-    * consumers recomputed the identical broadcast-into-postings pass:
-    * the graded `text_bm25`, `retrieval_rrf`'s lexical arm, and
-    * `retrieval_prf`'s feedback selection. Probe-bounded rows
-    * (q_doc, doc_id, score_dec DECIMAL(20,10), n_terms) — decimals
-    * round-trip parquet exactly, so ranking order is untouched. */
-  private object Bm25ScoresMemo
-      extends graft.core.DerivedFixture("bm25_scores_memo", "documents") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      bm25ScoresDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** r16 memo policy: the graded consumers derive the score table
-    * inline ([[bm25ScoresDirect]]); the memo stays for tests/tools. */
-  private[llm] def bm25Scores(s: SparkSession, d: String): DataFrame =
-    bm25ScoresDirect(s, d)
-
-  /** Disk+session memo of the rank-annotated FIRST-STAGE CANDIDATE
-    * POOL — the standard retrieval artifact downstream rerankers start
-    * from: the top [[TopRanksPoolK]] of [[bm25Scores]] per probe under
-    * the family's total order (score DESC, doc_id), rank carried as
-    * `rn`. On this fixture the probes' terms match nearly every doc
-    * (2.4M score rows at sf1, 2× the tf row count), so each consumer's
-    * rank-k window was re-sorting millions of rows to keep ≤ 10 —
-    * `retrieval_prf`'s feedback pass and `retrieval_rrf`'s lexical arm
-    * now slice this pool instead (both need k ≤ 10 ≪ the pool's 100).
-    * The graded `text_bm25` deliberately KEEPS its own full-table
-    * window — its measured cost IS that ranking, not a pool read.
-    * Layered on Bm25ScoresMemo (composed tag). */
-  private[llm] val TopRanksPoolK = 100
-
-  private[llm] object Bm25TopRanksMemo
-      extends graft.core.DerivedFixture("bm25_top_ranks_memo", "documents") {
-    override protected[graft] def layoutTag: String =
-      s"v1-k$TopRanksPoolK-sc${Bm25ScoresMemo.layoutTag}"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      topRanksDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The un-memoized pool derivation (one rank window over the score
-    * memo), exposed so `MemoParitySpec` pins memo ≡ direct. */
-  private[llm] def topRanksDirect(s: SparkSession, d: String): DataFrame = {
-    val rw = Window.partitionBy(col("q_doc"))
-      .orderBy(col("score_dec").desc, col("doc_id"))
-    bm25Scores(s, d)
-      .withColumn("rn", row_number().over(rw).cast(LongType))
-      .filter(col("rn") <= TopRanksPoolK)
-  }
-
-  private[graft] def bm25ScoresDirect(s: SparkSession, d: String): DataFrame = {
+  /** The first-pass BM25 score table (q_doc, doc_id, score_dec
+    * DECIMAL(20,10), n_terms) that `text_bm25`, `retrieval_rrf`'s
+    * lexical arm and `retrieval_prf`'s feedback selection start from. */
+  private[graft] def bm25Scores(s: SparkSession, d: String): DataFrame = {
     val tf = termFreqs(T.documents(s, d))
     // deliberately NOT cached: the four consumers (dl, df, probes,
     // candidates) do recompute the explode+agg, but it is not the
@@ -1063,17 +925,13 @@ object TextStats extends QueryGroup {
   // DESC, wh) total order; everything else inherits text_bm25's pinned
   // rounding points.
   private def prf(s: SparkSession, d: String): DataFrame = {
-    // History of this derivation's cost (the r11 driver priced a
-    // SEVEN-consumer tf recompute at 12.55 s vs the builder's 5.33):
-    // r11 cut tf once, r15 moved tf + the model + the rank pool to
-    // persisted memos — which the r16 memo policy takes back OFF the
-    // graded clock. Everything derives inline here, within this one
-    // timed query: tf is CACHED (in-plan, released by the harness after
-    // the query) because seven subtrees read it (three model aggs, the
-    // first-pass scoring, feedback mining, and the expanded second
-    // pass); the tiny model tables (dl, df, qidf — doc/vocab-bounded)
-    // are cached too so the two scoring passes share one derivation
-    // instead of cloning the window/agg trees.
+    // Everything derives inline here, within this one timed query: tf
+    // is CACHED (in-plan, released by the harness after the query)
+    // because seven subtrees read it (three model aggs, the first-pass
+    // scoring, feedback mining, and the expanded second pass); the tiny
+    // model tables (dl, df, qidf — doc/vocab-bounded) are cached too so
+    // the two scoring passes share one derivation instead of cloning
+    // the window/agg trees.
     val tf = termFreqs(T.documents(s, d)).cache()
     val dl = tf.groupBy(col("doc_id"))
       .agg(sum(col("c")).cast(LongType).as("dl")).cache()
@@ -1218,11 +1076,11 @@ object TextStats extends QueryGroup {
   // is two IEEE divisions of exact integers and one addition —
   // bit-identical across engines; rank ties break on doc_id.
   private def rrf(s: SparkSession, d: String): DataFrame = {
-    // lexical arm = top-10 of the first BM25 pass, derived inline (r16
-    // memo policy) under the family's total order
+    // lexical arm = top-10 of the first BM25 pass under the family's
+    // total order
     val lw = Window.partitionBy(col("q_doc"))
       .orderBy(col("score_dec").desc, col("doc_id"))
-    val lex = bm25ScoresDirect(s, d)
+    val lex = bm25Scores(s, d)
       .withColumn("lex_rn", row_number().over(lw).cast(LongType))
       .filter(col("lex_rn") <= 10)
       .select(col("q_doc"), col("doc_id"), col("lex_rn"))

@@ -164,32 +164,16 @@ object MetricBatch extends QueryGroup {
   }
 
   /** The graded bucket/segment knobs shared by the two range-split
-    * consumers and their index memo. */
+    * consumers and their shared index. */
   private val IdxBucketMs = 3600000L
   private val IdxSegRows = 1000
 
-  /** Disk+session memo of the GLOBALLY-INDEXED event relation
-    * (event_type, ts, event_id, value, g, seg) at the graded knobs:
-    * `metric_anomaly` and `metric_moving_median` each re-ran the
-    * two-phase prefix-sum indexing per run — the standing ≥2-consumer
-    * memo rule. The index is deterministic (row_number over the
-    * (ts, event_id) total order within each (series, bucket)). */
-  private[graft] object EventsIndexMemo
-      extends graft.core.DerivedFixture("events_index_memo", "events") {
-    override protected[graft] def layoutTag: String =
-      s"v1-b$IdxBucketMs-s$IdxSegRows"
-
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      indexedEventsDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** The un-memoized indexed relation (exposed so `MemoParitySpec`
-    * pins memo ≡ direct). */
-  private[graft] def indexedEventsDirect(s: SparkSession,
+  /** The GLOBALLY-INDEXED event relation (event_type, ts, event_id,
+    * value, g, seg) at the graded knobs — `metric_anomaly` and
+    * `metric_moving_median` both start from it. The index is
+    * deterministic (row_number over the (ts, event_id) total order
+    * within each (series, bucket)). */
+  private[graft] def indexedEvents(s: SparkSession,
       d: String): DataFrame =
     withGlobalIndex(T.events(s, d)
       .select(col("event_type"), col("ts"), col("event_id"), col("value")),
@@ -202,7 +186,8 @@ object MetricBatch extends QueryGroup {
       bucketMs, segRows), segRows)
 
   /** The detector over a prebuilt indexed relation — the registry path
-    * feeds the memo, [[anomalyRangeSplit]] rebuilds inline (specs). */
+    * feeds [[indexedEvents]], [[anomalyRangeSplit]] indexes its own
+    * events (specs). */
   private def anomalyFromIndexed(gIn: DataFrame, segRows: Int): DataFrame = {
     require(segRows >= 21,
       s"anomaly range-split: segRows=$segRows cannot cover the 20-row frame")
@@ -223,7 +208,7 @@ object MetricBatch extends QueryGroup {
   }
 
   private def anomaly(s: SparkSession, d: String): DataFrame =
-    anomalyFromIndexed(indexedEventsDirect(s, d), IdxSegRows)
+    anomalyFromIndexed(indexedEvents(s, d), IdxSegRows)
 
   private val anomalySql =
     """WITH e AS (
@@ -294,7 +279,8 @@ object MetricBatch extends QueryGroup {
       bucketMs, segRows), segRows)
 
   /** The filter over a prebuilt indexed relation — the registry path
-    * feeds the memo, [[movingMedianRangeSplit]] rebuilds inline. */
+    * feeds [[indexedEvents]], [[movingMedianRangeSplit]] indexes its own
+    * events. */
   private def movingMedianFromIndexed(g: DataFrame,
       segRows: Int): DataFrame = {
     require(segRows >= 21,
@@ -314,7 +300,7 @@ object MetricBatch extends QueryGroup {
   }
 
   private def movingMedian(s: SparkSession, d: String): DataFrame =
-    movingMedianFromIndexed(indexedEventsDirect(s, d), IdxSegRows)
+    movingMedianFromIndexed(indexedEvents(s, d), IdxSegRows)
 
   private val movingMedianSql =
     """WITH e AS (

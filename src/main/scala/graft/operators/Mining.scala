@@ -46,29 +46,10 @@ object Mining extends QueryGroup {
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("o")).agg(collect_set(col("it")).as("its"))
 
-  /** Disk+session memo of [[liftedPairsDirect]] — `mine_pairs` and
-    * `mine_assoc_rules` start from the identical frequent-pair relation
-    * (support-pruned, so the row count is item-vocabulary-bounded).
-    * Keyed on BOTH source tables: the baskets are a lineitem⋈part. */
-  private[graft] object LiftedPairsMemo
-      extends graft.core.DerivedFixture("mine_lifted_pairs", "lineitem,part") {
-    override protected def build(s: SparkSession, dir: String,
-        target: String): Unit =
-      liftedPairsDirect(s, dir).write.parquet(target)
-
-    def table(s: SparkSession, d: String): DataFrame =
-      s.read.parquet(ensure(s, d))
-  }
-
-  /** r16 memo policy: graded consumers derive the frequent-pair
-    * relation inline (its basket base is Materialize.cut inside); the
-    * memo stays for tests/tools. */
-  private def liftedPairs(s: SparkSession, d: String): DataFrame =
-    liftedPairsDirect(s, d)
-
-  /** Frequent pairs with both item supports and lift. Columns:
+  /** Frequent pairs with both item supports and lift — `mine_pairs` and
+    * `mine_assoc_rules` both start from it. Columns:
     * (ia, ib, pair_cnt, supp_a, supp_b, n_orders, lift). */
-  private[graft] def liftedPairsDirect(s: SparkSession, d: String): DataFrame = {
+  private[graft] def liftedPairs(s: SparkSession, d: String): DataFrame = {
     // the basket-array relation feeds n / supp / pairs — cut once
     val b = Materialize.cut(basketArrays(s, d))
     val n = b.agg(count(lit(1)).as("n_orders"))

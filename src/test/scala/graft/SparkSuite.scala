@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared session base: one local session per suite, UTC, AQE on, engine
-  * extensions registered (SURVEY.md §7.1 SessionFactory). */
+/** Shared session base: one local session per suite, built by
+  * [[graft.core.LocalSession]] like the mains (SURVEY.md §7.1
+  * SessionFactory). */
 abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.core.LocalSession(4, getClass.getSimpleName)
 
   val sfDir = "/root/testdata/sf0.001"
 

@@ -49,13 +49,12 @@ class MaterializeSpec extends SparkSuite {
     // this is the REGISTRY path (multi-round loops, real shingle join)
     // under the cluster-mode config, not a toy
     val d = "/root/testdata/sf0.01"
-    // dedup_clusters reads the r15 label memo at query time; its loop
-    // (the thing that must checkpoint reliably in cluster mode) is the
-    // memo's BUILD path — drive that directly
+    // dedup_clusters' label loop is the thing that must checkpoint
+    // reliably in cluster mode — drive it directly
     val loops: Seq[(String, org.apache.spark.sql.SparkSession => Array[org.apache.spark.sql.Row])] = Seq(
       "dedup_clusters label build" ->
         ((ss: org.apache.spark.sql.SparkSession) =>
-          graft.llm.Dedup.clusterLabelsDirect(ss, d)
+          graft.llm.Dedup.clusterLabels(ss, d)
             .orderBy(org.apache.spark.sql.functions.col("doc_id")).collect()),
       "graph_pagerank" ->
         ((ss: org.apache.spark.sql.SparkSession) =>

@@ -11,9 +11,8 @@ class ReleaseSpec extends SparkSuite {
   test("storage-pinning queries leave zero persistent RDDs after release") {
     // one representative per pinning mechanism: localCheckpoint loops
     // (pagerank) and cached self-join intermediates (semdedup,
-    // tf-cosine). dedup_clusters reads the r15 label memo and pins
-    // nothing at query time — its loop's storage is exercised through
-    // clusterLabelsDirect in MaterializeSpec.
+    // tf-cosine). dedup_clusters' label loop storage is exercised
+    // through clusterLabels in MaterializeSpec.
     Seq("graph_pagerank", "dedup_semdedup", "dedup_tf_cosine").foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).collect()
       // the query genuinely pinned something — otherwise this spec tests

@@ -47,17 +47,17 @@ class GraphPackSpec extends SparkSuite {
     def viaQuery() = SparkEntry.queries("graph_degree_dist")(spark, dir)
       .select((col("degree") * col("n")).as("dsum"))
       .collect().map(_.getLong(0)).sum
-    // two near-dup docs -> one edge; the memoized query sees it
+    // two near-dup docs -> one edge; the query sees it
     val nearDup = "the quick brown fox jumps over the lazy dog again and again today"
     write(Seq(nearDup, nearDup + " x", "completely unrelated words about spark shuffles"))
     assert(direct().distinct.length == 2)
-    assert(viaQuery() == 2L, "memoized edge set missed the near-dup pair")
-    // rewrite the SAME path with no near-dups: the source-state
-    // fingerprint must invalidate the memo, not serve stale edges
+    assert(viaQuery() == 2L, "edge set missed the near-dup pair")
+    // rewrite the SAME path with no near-dups: the query must read the
+    // new source, not serve stale edges
     write(Seq("alpha beta gamma delta words one", "totally different content here now",
       "third doc shares nothing either way"))
     assert(direct().isEmpty)
-    assert(viaQuery() == 0L, "stale memo served after the fixture was rewritten")
+    assert(viaQuery() == 0L, "stale edges served after the fixture was rewritten")
   }
 
   test("triangles: per-node counts equal a brute-force enumeration") {
@@ -194,8 +194,8 @@ class GraphPackSpec extends SparkSuite {
     // inside exactly one connected component of the SAME >=0.3 pair graph
     val lpa = SparkEntry.queries("graph_lpa_communities")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
-    val cc = Dedup.ccLabels(
-        GraphOps.PairsMemo.pairs(spark, sfDir))
+    val cc = Dedup.ccLabels(Dedup.jaccardPairs(spark, sfDir)
+        .filter(col("jaccard") >= 0.3).select(col("doc_a"), col("doc_b")))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
     assert(lpa.nonEmpty)
     val byCommunity = lpa.groupBy(_._2)

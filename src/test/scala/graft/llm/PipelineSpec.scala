@@ -84,10 +84,8 @@ class PipelineSpec extends SparkSuite {
         r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0
     })
     // size-based (not forced) broadcast: at fixture scale AQE must pick
-    // a broadcast for the small benchmark side on its own — asserted on
-    // the DIRECT pipeline (the memo's build path; the graded query reads
-    // the memoized parquet, whose plan is just a scan + sort)
-    val direct = Pipeline.decontaminateDirect(spark, sfDir)
+    // a broadcast for the small benchmark side on its own
+    val direct = Pipeline.decontaminate(spark, sfDir)
     direct.write.format("noop").mode("overwrite").save()
     val p = direct.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p)

@@ -209,9 +209,8 @@ class PlanSpec extends SparkSuite {
       l.contains("Exchange hashpartitioning") && l.contains("seg"))
     assert(segEx === 1, p)
     // the volume-scaling phase-1 key (event_type, bkt) lives in the
-    // index memo's BUILD path since r15 (the memo rule: shapes are
-    // pinned where the work happens) — assert it there
-    val build = MetricBatch.indexedEventsDirect(spark, sfDir)
+    // shared index derivation — assert it there
+    val build = MetricBatch.indexedEvents(spark, sfDir)
     build.collect()
     val bp = build.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
@@ -255,9 +254,8 @@ class PlanSpec extends SparkSuite {
   }
 
   test("text_bm25: query terms broadcast into the postings join; top-k is WindowGroupLimit") {
-    // the broadcast shape lives in the score memo's BUILD path (the
-    // graded query reads the memoized parquet and only ranks)
-    val direct = graft.llm.TextStats.bm25ScoresDirect(spark, sfDir)
+    // the broadcast shape lives in the shared score derivation
+    val direct = graft.llm.TextStats.bm25Scores(spark, sfDir)
     direct.write.format("noop").mode("overwrite").save()
     val pd = direct.queryExecution.executedPlan.toString
     // the ≤3·|probes| (q_doc, wh, idf) side must ride a broadcast — the
@@ -530,11 +528,10 @@ class PlanSpec extends SparkSuite {
     // the r11 driver-gate lesson: both LMs' efficiency story leaned on
     // size-based AQE broadcasts that another JVM's stats flipped to
     // multi-exchange SMJ (19.9 s / 15.1 s vs the builder's 2.1 / 2.4).
-    // r16 (memo policy): the bigram table derives INLINE and is
-    // .cache()d in-plan, so the pin is now: the scoring side reads the
-    // in-memory relation (no second window over the corpus), and every
-    // vocabulary-bounded model join is broadcast()-forced — no JVM
-    // gets to vote.
+    // The bigram table derives inline and is .cache()d in-plan, so the
+    // pin is: the scoring side reads the in-memory relation (no second
+    // window over the corpus), and every vocabulary-bounded model join
+    // is broadcast()-forced — no JVM gets to vote.
     for (name <- Seq("text_bigram_lm", "text_kneser_ney")) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
@@ -550,9 +547,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("retrieval_prf: consumers read the cached tf — no uncached corpus rescan") {
-    // r11: the un-materialized tf priced its 7-consumer recompute at
-    // 12.55 s on the driver vs 5.33 builder-side. r16 (memo policy):
-    // tf derives INLINE and is .cache()d in-plan — the pin is that the
+    // tf derives inline and is .cache()d in-plan — the pin is that the
     // plan reads in-memory relations (the tf/model caches), broadcasts
     // its probe-bounded sides, and never degrades to a cartesian.
     val df = SparkEntry.queries("retrieval_prf")(spark, sfDir)
@@ -613,7 +608,7 @@ class PlanSpec extends SparkSuite {
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     val finalSection = p.split("== Initial Plan ==").head
-    // two pinned broadcasts ride the memoized tf relation: the
+    // two pinned broadcasts ride the cut tf relation: the
     // doc-count-sized (doc_id, lang, source) attribute join and the
     // 1024-row bucket log-ratio table — the corpus-sized side must
     // never shuffle for either

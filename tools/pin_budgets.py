@@ -47,9 +47,9 @@ WIDE_FAMILY = {
     "dedup_simhash_pairs", "dedup_ngram_jaccard", "dedup_containment",
     "dedup_prefix_filter", "q30_fingerprint_dedup", "q30b_shingle_stats",
     "q31_cosine_topk",
-    # r16: the memo policy routed every md5/shingle/term-hash corpus
-    # scan back inline, so the whole text/dedup/graph tail now tracks
-    # documents.parquet page-cache state per query (the round-12 driver
+    # every md5/shingle/term-hash corpus scan runs inline in its own
+    # query (no persisted memos), so the whole text/dedup/graph tail
+    # tracks documents.parquet page-cache state per query (the round-12
     # outlier class) -- same wide margin as the original family.
     "dedup_clusters", "dedup_keep_best", "dedup_lsh_recall",
     "graph_modularity", "graph_pagerank", "graph_triangles",
@@ -118,9 +118,9 @@ for q in keys:
         sys.exit(f"{q} has a failure marker in a board - fix before pinning")
     t = max(ts)
     if q in WIDE_FAMILY:
-        # same absolute jitter floor as below: a family query that gets
-        # memoized into the sub-second range still needs >= 1 s of
-        # absolute slack or scheduler jitter reproduces the breach mode
+        # same absolute jitter floor as below: a family query in the
+        # sub-second range still needs >= 1 s of absolute slack or
+        # scheduler jitter reproduces the breach mode
         doc[q] = round(max(2.5 * t + 0.6, t + 1.0), 2)
     else:
         # absolute 1 s headroom floor: short queries' wall time is
