@@ -157,7 +157,12 @@ object MetricBatch extends QueryGroup {
         Window.partitionBy(col("event_type")).orderBy(col("bkt"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("event_type"), col("bkt"), col("off"))
-    posed.join(offs, Seq("event_type", "bkt"))
+    // broadcast the summary, not whichever side AQE's runtime stats
+    // favour: a broadcast of `posed` would stream `offs`, whose
+    // event_type partitioning then satisfies the (event_type, seg)
+    // windows downstream and drops their segment exchange, so they run
+    // one task per series
+    posed.join(broadcast(offs), Seq("event_type", "bkt"))
       .withColumn("g", col("off") + col("pos"))
       .withColumn("seg", expr(s"(g - 1) div ${segRows}L"))
       .drop("bkt", "pos", "off")

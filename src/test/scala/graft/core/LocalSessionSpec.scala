@@ -18,4 +18,10 @@ class LocalSessionSpec extends SparkSuite {
       .collect().head.getDouble(0)
     assert(v == 11.0)
   }
+
+  test("shared session: artifact isolation off, one executor classloader") {
+    val (key, value) = LocalSession.SharedClassLoader
+    assert(key == "spark.sql.artifact.isolation.enabled" && value == "false")
+    assert(spark.conf.get(key) == "false")
+  }
 }

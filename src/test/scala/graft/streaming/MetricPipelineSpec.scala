@@ -1,9 +1,16 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSuite
+import graft.core.LocalSession
 import graft.streaming.MetricPipeline._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -65,22 +72,24 @@ class MetricPipelineSpec extends SparkSuite {
       50.0 -> "hold", 80.0 -> "scale-in"))
   }
 
-  /** Drives the scripted low-usage epochs through a cooldown
-    * implementation and returns the emitted action tuples — the shared
-    * golden harness for the transformWithState `decide` and the legacy
-    * flatMapGroupsWithState `decideLegacy`. */
-  private def cooldownGolden(
-      impl: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.Dataset[
-        graft.state.Scaling.Action],
-      sinkName: String): Seq[(String, Long, Int, Int)] = {
-    val input = MemoryStream[MetricPoint](spark)
-    val actions = impl(
-      windowAvg(input.toDS(), window_ = "5 minutes", slide = "5 minutes"), 0)
-    val q = actions.toDF().writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Append).start()
+  /** Drives the scripted low-usage epochs through `decide` on `session`,
+    * from a fresh checkpoint, and returns the emitted action tuples in
+    * order. */
+  private def cooldownRun(session: SparkSession): Seq[(String, Long, Int, Int)] = {
+    val input = MemoryStream[MetricPoint](session)
+    val actions = decide(
+      windowAvg(input.toDS(), window_ = "5 minutes", slide = "5 minutes"),
+      initialCapacity = 0)
+    val out = new ConcurrentLinkedQueue[(String, Long, Int, Int)]
+    val sink: (DataFrame, Long) => Unit = (df, _) =>
+      df.collect().foreach(r => out.add((r.getAs[String]("rule"),
+        r.getAs[Long]("atSec"), r.getAs[Int]("from"), r.getAs[Int]("to"))))
+    val q = actions.toDF().writeStream.outputMode(OutputMode.Append)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_cooldown").toString)
+      .foreachBatch(sink).start()
     try {
-      // epoch 1: low usage in windows [0,300) and [300,600) — the second
-      // window is inside the 300 s cooldown started by the first
+      // epoch 1: low usage in windows [0,300) and [300,600)
       input.addData(
         MetricPoint(ts(10), "j-1", "m", 5.0),
         MetricPoint(ts(310), "j-1", "m", 5.0))
@@ -91,31 +100,44 @@ class MetricPipelineSpec extends SparkSuite {
       q.processAllAvailable()
       input.addData(MetricPoint(ts(5000), "j-1", "m", 50.0))
       q.processAllAvailable()
-      spark.table(sinkName)
-        .orderBy("atSec").collect()
-        .map(r => (r.getAs[String]("rule"), r.getAs[Long]("atSec"),
-          r.getAs[Int]("from"), r.getAs[Int]("to"))).toSeq
+      out.asScala.toSeq.sortBy(_._2)
     } finally q.stop()
   }
 
   private val cooldownExpected = Seq(
     ("scale-out", 300L, 0, 5),   // window [0,300) fires
-    // window [300,600) suppressed by cooldown (600-300 < 300 is false…
-    // actually 600-300 == 300 → NOT in cooldown → fires)
+    // window [300,600) fires too: the cooldown holds while less than
+    // 300 s have passed since the last action, and 600 - 300 = 300
     ("scale-out", 600L, 5, 10),
     ("scale-out", 1200L, 10, 15))
 
   test("R16/R17: transformWithState cooldown emits the expected action sequence") {
     ensureRocksDbStateStore(spark)
-    assert(cooldownGolden(
-      (avgs, cap0) => decide(avgs, initialCapacity = cap0),
-      "act_out_tws") == cooldownExpected)
+    assert(cooldownRun(spark) == cooldownExpected)
   }
 
-  test("R16/R17: legacy flatMapGroupsWithState agrees with the golden sequence") {
-    assert(cooldownGolden(
-      (avgs, cap0) => decideLegacy(avgs, initialCapacity = cap0),
-      "act_out_legacy") == cooldownExpected)
+  /** Generated classes a restarted [[cooldownRun]] may still compile: one
+    * per micro-batch, of which it runs at most six. Spark inlines each
+    * batch's watermark as a literal in the window operator's predicates,
+    * so a batch whose watermark no earlier query had compiles its
+    * predicate anew. A restart whose tasks got a new executor classloader
+    * compiled 34 classes. */
+  private val RestartCompileBound = 6
+
+  test("a restarted stream query reuses the last query's generated classes") {
+    // Spark's default, set explicitly: the hook must turn it off
+    val session = spark.newSession()
+    session.conf.set(LocalSession.SharedClassLoader._1, "true")
+    ensureRocksDbStateStore(session)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val first = cooldownRun(session)
+    val before = compiles.getCount
+    val second = cooldownRun(session)
+    val compiled = compiles.getCount - before
+    assert(first == cooldownExpected)
+    assert(second == first)
+    assert(compiled <= RestartCompileBound,
+      s"the restarted query compiled $compiled generated classes")
   }
 
   test("watermark drops late rows beyond the delay") {
