@@ -16,25 +16,21 @@ import graft.streaming.CommitFiles
   *
   * Layout — append-only batches: `batch=<id>/fid=<f>/…` data files plus
   * `_manifest/batch=<id>/` stats rows (fid, n, ck/dy min/max), with
-  * `_latest` naming the highest committed batch. Batch-first nesting is
-  * what makes replay idempotent: a replayed batch OVERWRITES its own
-  * `batch=<id>` root and `_manifest/batch=<id>` wholesale and re-flips
-  * the same pointer; a replay after the flip short-circuits on the
-  * pointer; a crash between write and flip leaves an uncommitted batch
-  * dir every reader ignores (reads filter `batch <= _latest`) and the
-  * replay overwrites. The checkpoint-lineage brand turns a
-  * wiped-checkpoint restart into a loud failure (the StreamMerge rule).
-  * An EMPTY batch still flips the pointer (the StreamIvf zero-norm
-  * lesson): `partitionBy` writes no dirs for an empty frame, and readers
-  * tolerate the gap by reading only what exists.
+  * `_latest` naming the highest committed batch, committed by the
+  * [[graft.streaming.CommitFiles.commitBatch]] protocol. Batch-first
+  * nesting is what makes replay idempotent: a replayed batch OVERWRITES
+  * its own `batch=<id>` root and `_manifest/batch=<id>` wholesale, and an
+  * uncommitted batch dir is ignored by every reader (reads filter
+  * `batch <= _latest`). An EMPTY batch still flips the pointer (the
+  * StreamIvf zero-norm lesson): `partitionBy` writes no dirs for an
+  * empty frame, and readers tolerate the gap by reading only what exists.
   *
   * Pruning gets FINER than the batch layout's, for free: manifest rows
   * are per (batch, fid), so a range predicate prunes at (batch, fid)
   * granularity — a fid whose extents only overlapped the predicate in
   * one ingest batch scans one batch's file, not every batch's. Compacting
   * batches back to the one-dir-per-fid form is [[ZLayout.write]] over
-  * [[scanAll]] with a `CommitFiles.swapDir` (the q59 compaction shape);
-  * not run inline here.
+  * [[scanAll]] ([[compact]]); not run inline here.
   *
   * Scale notes: per batch the work is one narrow projection + one hash
   * exchange on fid + a fid-count-bounded stats aggregate — no reads of
@@ -42,12 +38,8 @@ import graft.streaming.CommitFiles
   * (batch, fid), metadata-scale. */
 object StreamLake {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
-  private def brandPath(dir: String) = Paths.get(dir, "_checkpoint")
-
   /** Highest committed batch, if any. */
-  def latestVersion(dir: String): Option[Long] =
-    CommitFiles.readPointer(pointerPath(dir))
+  def latestVersion(dir: String): Option[Long] = CommitFiles.committed(dir)
 
   /** `batch=` children of `root` committed per `tableDir`'s pointer. */
   private def committedDirs(tableDir: String, root: String): Seq[String] =
@@ -61,29 +53,31 @@ object StreamLake {
   /** Ingest one micro-batch of orders rows. Safe to replay with the same
     * batchId. */
   def applyBatch(spark: SparkSession, dir: String, orders: DataFrame,
-      batchId: Long, checkpoint: Option[String] = None): Unit = {
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_lake")
+      batchId: Long, checkpoint: Option[String] = None): Unit =
+    CommitFiles.commitBatch(dir, "stream_lake", batchId, checkpoint) {
+      val laid = ZLayout.ordersProjection(orders).persist()
+      try {
+        if (!laid.isEmpty)
+          writeLaid(laid, s"$dir/batch=$batchId", s"$dir/_manifest/batch=$batchId")
+        // empty batch: no dirs, but the pointer still advances — otherwise
+        // the batch replays in full on every restart
+        true
+      } finally laid.unpersist()
     }
-    if (latestVersion(dir).exists(_ >= batchId)) return
-    val laid = ZLayout.ordersProjection(orders).persist()
-    try {
-      if (!laid.isEmpty) {
-        laid.repartition(col("fid"))
-          .sortWithinPartitions(col("fid"), col("zkey"))
-          .write.mode("overwrite").partitionBy("fid")
-          .parquet(s"$dir/batch=$batchId")
-        laid.groupBy(col("fid"))
-          .agg(count(lit(1)).as("n"),
-            min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
-            min(col("dy")).as("dy_min"), max(col("dy")).as("dy_max"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/_manifest/batch=$batchId")
-      }
-      // empty batch: no dirs, but the pointer still advances — otherwise
-      // the batch replays in full on every restart
-      CommitFiles.atomicWrite(pointerPath(dir), batchId.toString)
-    } finally laid.unpersist()
+
+  /** One batch's fid layout at `data` (one hash exchange on fid, zkey
+    * order inside each fid) and its manifest rows at `manifest`. */
+  private def writeLaid(laid: DataFrame, data: String, manifest: String): Unit = {
+    laid.repartition(col("fid"))
+      .sortWithinPartitions(col("fid"), col("zkey"))
+      .write.mode("overwrite").partitionBy("fid")
+      .parquet(data)
+    laid.groupBy(col("fid"))
+      .agg(count(lit(1)).as("n"),
+        min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
+        min(col("dy")).as("dy_min"), max(col("dy")).as("dy_max"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(manifest)
   }
 
   private val manifestSchema = StructType(Seq(
@@ -92,7 +86,9 @@ object StreamLake {
     StructField("dy_min", LongType), StructField("dy_max", LongType),
     StructField("batch", LongType)))
 
-  private val scanSchema = StructType(Seq(
+  /** Every committed row's schema: the [[ZLayout.ordersProjection]]
+    * columns plus the `batch` partition column. */
+  private[graft] val scanSchema = StructType(Seq(
     StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
     StructField("o_orderstatus", StringType),
     StructField("o_totalprice", DoubleType),
@@ -239,7 +235,7 @@ object StreamLake {
     * dropped — staging-present ⇒ rollback, staging-absent ⇒
     * roll-forward). Readers between the renames can see a partial
     * table — the same documented maintenance window as
-    * `CommitFiles.swapDir`. */
+    * `CommitFiles.stagedCompaction`'s swap. */
   def compact(spark: SparkSession, dir: String): Unit = {
     healCompact(dir)
     val v = latestVersion(dir).getOrElse(throw new IllegalStateException(
@@ -247,16 +243,7 @@ object StreamLake {
     val all = scanAll(spark, dir).drop("batch")
       .withColumn("fid", col("fid").cast("long"))
     val staging = stagingRoot(dir)
-    all.repartition(col("fid"))
-      .sortWithinPartitions(col("fid"), col("zkey"))
-      .write.mode("overwrite").partitionBy("fid")
-      .parquet(s"$staging/batch=$v")
-    all.groupBy(col("fid"))
-      .agg(count(lit(1)).as("n"),
-        min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
-        min(col("dy")).as("dy_min"), max(col("dy")).as("dy_max"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/m_batch=$v")
+    writeLaid(all, s"$staging/batch=$v", s"$staging/m_batch=$v")
     // the compaction floor is STAGED with the payload, not written after
     // the swap: once the destructive swap begins, every crash state that
     // keeps the folded data (roll-forward) also carries the floor in

@@ -101,35 +101,24 @@ object IvfIndex {
 
   /** Rewrite `assign/` so each cell partition holds ONE file again (an
     * append per ingest slice otherwise accumulates small files and the
-    * inverted-list seek degrades into many tiny reads). The rewrite
-    * lands in a sibling directory first and is swapped in by two
-    * renames ([[graft.streaming.CommitFiles.swapDir]]). Maintenance
-    * contract on this plain-filesystem layout: run compact in the
-    * ingest pauses — an [[append]] racing the swap is detected (the
-    * live file set is fingerprinted before the read and re-checked
-    * before the swap) and compact aborts loudly rather than deleting
-    * the appended rows, but a reader BETWEEN the two renames can
-    * observe the directory missing. A crash anywhere leaves a state the
-    * next compact self-heals (`healSwap`); an object-store deployment
-    * would swap a manifest pointer instead and have neither window. */
+    * inverted-list seek degrades into many tiny reads), by the
+    * [[graft.streaming.CommitFiles.stagedCompaction]] protocol. Run it
+    * in the ingest pauses: an [[append]] racing the swap makes compact
+    * abort loudly rather than delete the appended rows, and a reader
+    * between the swap's two renames can observe the directory missing.
+    * An object-store deployment would swap a manifest pointer instead
+    * and have neither window. */
   def compact(s: SparkSession, dir: String): Unit = {
-    import graft.streaming.CommitFiles
     val live = Paths.get(dir, "assign")
-    CommitFiles.healSwap(live)
-    val before = CommitFiles.partSet(live)
-    s.read.parquet(live.toString).select(col("vec_id"), col("ck"))
-      // all rows of one ck land in one task, so partitionBy writes
-      // exactly one file per cell
-      .repartition(col("ck"))
-      .write.mode("overwrite").partitionBy("ck")
-      .parquet(CommitFiles.staging(live).toString)
-    if (CommitFiles.partSet(live) != before) {
-      CommitFiles.rmTree(CommitFiles.staging(live).toFile)
-      throw new IllegalStateException(
-        "ivf_index: assign/ changed while compacting (a concurrent append?) " +
-          "— aborted without swapping; re-run compact in an ingest pause")
+    graft.streaming.CommitFiles.stagedCompaction(live, "ivf_index",
+        "a concurrent append?", "re-run compact in an ingest pause") { staging =>
+      s.read.parquet(live.toString).select(col("vec_id"), col("ck"))
+        // all rows of one ck land in one task, so partitionBy writes
+        // exactly one file per cell
+        .repartition(col("ck"))
+        .write.mode("overwrite").partitionBy("ck")
+        .parquet(staging.toString)
     }
-    CommitFiles.swapDir(live)
   }
 
   /** Centroid drift of corpus `d` (typically the original + appended

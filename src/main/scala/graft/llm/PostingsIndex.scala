@@ -114,27 +114,20 @@ object PostingsIndex {
   }
 
   /** Rewrite `postings/` so each bucket partition holds ONE file again —
-    * same staged-swap machinery (and the same crash-self-healing and
-    * concurrent-append-abort guarantees) as [[IvfIndex.compact]].
+    * the [[graft.streaming.CommitFiles.stagedCompaction]] protocol, with
+    * the ingest-pause contract of [[IvfIndex.compact]].
     * `doclen/` is left as-is: it is only ever bulk-scanned into a join,
     * never seeked per-list, so small files cost it almost nothing. */
   def compact(s: SparkSession, dir: String): Unit = {
-    import graft.streaming.CommitFiles
     val live = Paths.get(dir, "postings")
-    CommitFiles.healSwap(live)
-    val before = CommitFiles.partSet(live)
-    s.read.parquet(live.toString)
-      .select(col("doc_id"), col("wh"), col("c"), col("tb"))
-      .repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(CommitFiles.staging(live).toString)
-    if (CommitFiles.partSet(live) != before) {
-      CommitFiles.rmTree(CommitFiles.staging(live).toFile)
-      throw new IllegalStateException(
-        "postings_index: postings/ changed while compacting (a concurrent " +
-          "append?) — aborted without swapping; re-run in an ingest pause")
+    graft.streaming.CommitFiles.stagedCompaction(live, "postings_index",
+        "a concurrent append?", "re-run in an ingest pause") { staging =>
+      s.read.parquet(live.toString)
+        .select(col("doc_id"), col("wh"), col("c"), col("tb"))
+        .repartition(col("tb"))
+        .write.mode("overwrite").partitionBy("tb")
+        .parquet(staging.toString)
     }
-    CommitFiles.swapDir(live)
   }
 
   /** Fraction of corpus `d`'s docs the index has NOT ingested, in [0,1].

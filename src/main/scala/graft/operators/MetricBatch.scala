@@ -6,14 +6,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
 import graft.core.{QueryDef, QueryGroup, Tables => T}
+import graft.state.Scaling
+import graft.streaming.MetricPipeline
 
 /** Q29 — batch replica of the reference's metric→alarm pipeline
   * (SURVEY.md §3.3): the events table plays the metric stream
   * (ts, event_type AS metric, value); a 5-minute tumbling window average
   * (CloudWatch `Statistic: AVERAGE, Period: 300`,
   * /root/reference/config/instance-group-config.json:44-49) is classified
-  * against the reference's thresholds — avg ≤ 25 → scale-out, avg > 75 →
-  * scale-in (/root/reference/config/instance-group-config.json:47-51,76-80).
+  * by the streaming pipeline's `MetricPipeline.classify` over the
+  * reference's thresholds, `Scaling.referenceRules` — avg ≤ 25 →
+  * scale-out, avg > 75 → scale-in
+  * (/root/reference/config/instance-group-config.json:47-51,76-80).
   *
   * The streaming twin of this query (windows + watermark +
   * mapGroupsWithState cooldown) lives in graft.streaming and is
@@ -23,18 +27,13 @@ object MetricBatch extends QueryGroup {
   import T.dec
 
   private def q29(s: SparkSession, d: String): DataFrame =
-    T.events(s, d)
-      .groupBy(window(col("ts"), "5 minutes").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_obs"),
-        (sum(dec(col("value"))).cast(DoubleType) / count(lit(1))).as("avg_value"))
-      .select(
-        col("win.start").as("win_start"),
-        col("event_type"),
-        col("n_obs"),
-        col("avg_value"),
-        when(col("avg_value") <= 25, "scale-out")
-          .when(col("avg_value") > 75, "scale-in")
-          .otherwise("hold").as("decision"))
+    MetricPipeline.classify(T.events(s, d)
+        .groupBy(window(col("ts"), "5 minutes").as("win"), col("event_type"))
+        .agg(count(lit(1)).as("n_obs"),
+          (sum(dec(col("value"))).cast(DoubleType) / count(lit(1))).as("avg_value"))
+        .select(col("win.start").as("win_start"), col("event_type"),
+          col("n_obs"), col("avg_value")),
+        Scaling.referenceRules)
       .orderBy(col("win_start"), col("event_type"))
 
   private val q29Sql =

@@ -42,7 +42,7 @@ import graft.lake.StreamLake
   */
 class LakeSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LakeSource.schema
+    StreamLake.scanSchema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -53,14 +53,6 @@ class LakeSource extends TableProvider {
 }
 
 object LakeSource {
-  val schema: StructType = StructType(Seq(
-    StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-    StructField("o_orderstatus", StringType),
-    StructField("o_totalprice", DoubleType),
-    StructField("ck", LongType), StructField("dy", LongType),
-    StructField("zkey", LongType), StructField("fid", LongType),
-    StructField("batch", LongType)))
-
   private[sources] def compactionFloor(dir: String): Long =
     graft.streaming.CommitFiles
       .readPointer(java.nio.file.Paths.get(dir, "_compacted")).getOrElse(0L)
@@ -85,12 +77,12 @@ private class LakeTable(path: String, maxBatches: Int)
     s"lake_source: maxBatchesPerTrigger must be >= 1, got $maxBatches " +
       "(0 would stall the stream silently, never advancing its offset)")
   override def name(): String = s"lake($path)"
-  override def schema(): StructType = LakeSource.schema
+  override def schema(): StructType = StreamLake.scanSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new Scan {
-      override def readSchema(): StructType = LakeSource.schema
+      override def readSchema(): StructType = StreamLake.scanSchema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new LakeMicroBatchStream(path, maxBatches)
     }

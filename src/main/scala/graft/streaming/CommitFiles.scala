@@ -2,18 +2,54 @@ package graft.streaming
 
 import java.nio.file.{FileAlreadyExistsException, FileSystemException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-/** Shared exactly-once plumbing for the parquet table layouts
-  * ([[StreamMerge]], [[StreamCurate]], `llm.IvfIndex`): the atomic
-  * commit-pointer file, the checkpoint-lineage brand, and the
-  * staged-directory swap compactions use. The brand is what turns
-  * "restarted with a fresh checkpoint against an existing output dir"
-  * from silent data loss into a loud failure; the swap machinery is
-  * what keeps a crashed compaction from being sticky. */
+/** The exactly-once commit protocol of graft's plain-parquet layouts:
+  * the one place that knows the order and the files of a commit.
+  *
+  * Batch commit ([[commitBatch]]), used by the `foreachBatch` sinks
+  * [[StreamMerge]], `lake.StreamLake`, [[StreamIndex]], [[StreamIvf]],
+  * [[StreamCurate]] and [[StreamCow]]. Idempotence is keyed on the
+  * batchId (Structured Streaming's exactly-once sink contract):
+  *   1. claim the output dir's lineage brand (`_checkpoint`; StreamCow's
+  *      `_cow_checkpoint`) for the query's checkpoint, or fail loudly if
+  *      another lineage owns it — a fresh checkpoint restarts batchIds at
+  *      0, and step 2 would then silently drop every replayed batch;
+  *   2. return if the pointer (`_latest`; StreamCow's `_batch`) already
+  *      covers the batchId — a replay after the flip;
+  *   3. run the sink's publish body, which overwrites only this batch's
+  *      own files, so a replay after a crash before the flip rewrites
+  *      them and readers (which stop at the pointer) never see them;
+  *   4. flip the pointer by atomic rename, unless the body declined: an
+  *      idle trigger of a sink whose readers would otherwise open a
+  *      version dir that was never written.
+  *
+  * Staged compaction ([[stagedCompaction]]), used by `llm.IvfIndex.compact`
+  * (`assign/`), `llm.PostingsIndex.compact` (`postings/`),
+  * [[StreamIndex.compact]] (`postings/`, `doclen/`) and
+  * [[StreamCurate.compact]] (`fps/`, `verdicts/`):
+  *   1. heal what a crashed swap left: a live dir missing while its
+  *      `<live>_retiring` sibling exists is rolled back, and leftover
+  *      `<live>_retiring` / `<live>_compacting` dirs are deleted;
+  *   2. fingerprint live's parquet file set ([[partSet]]);
+  *   3. the body writes the compacted copy into `<live>_compacting`;
+  *   4. if live's file set changed meanwhile (a concurrent writer), drop
+  *      the staging dir and fail loudly without swapping;
+  *   5. swap by two renames (live → `<live>_retiring`, staging → live)
+  *      and delete the retired copy. A reader between the renames can see
+  *      live missing — the maintenance window of this layout; a crash
+  *      anywhere leaves a state step 1 repairs on the next run. */
 private[graft] object CommitFiles {
+
+  /** The pointer and brand file names unless a sink names its own. */
+  private val Pointer = "_latest"
+  private val Brand = "_checkpoint"
 
   /** Committed pointer value, if any batch has flipped it. */
   def readPointer(p: Path): Option[Long] =
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
+
+  /** Highest batch committed under `dir`'s `pointer` file, if any. */
+  def committed(dir: String, pointer: String = Pointer): Option[Long] =
+    readPointer(Paths.get(dir, pointer))
 
   /** Pointer flip via temp-file + ATOMIC_MOVE: readers see either the
     * old value or the new one, never a torn write. */
@@ -40,31 +76,51 @@ private[graft] object CommitFiles {
     walk(p.toFile).map(_.getPath).filter(_.endsWith(".parquet")).toSet
   }
 
+  /** One micro-batch of a sink under `dir` (protocol steps 1–4 above).
+    * `publish` writes the batch and returns whether to flip the pointer.
+    * Returns whether this call flipped it. `who` prefixes the failure
+    * messages (e.g. "stream_merge"). */
+  def commitBatch(dir: String, who: String, batchId: Long,
+      checkpoint: Option[String], pointer: String = Pointer,
+      brand: String = Brand)(publish: => Boolean): Boolean = {
+    checkpoint.map(lineageId).foreach(ck =>
+      claimOrAssert(Paths.get(dir, brand), ck, who))
+    if (committed(dir, pointer).exists(_ >= batchId)) false
+    else if (!publish) false
+    else { atomicWrite(Paths.get(dir, pointer), batchId.toString); true }
+  }
+
+  /** Compact the directory `live` (protocol steps 1–5 above): `write`
+    * receives the staging path to write the compacted copy into. The
+    * concurrent-writer failure reads "`who`: <live name>/ changed while
+    * compacting (`cause`) — aborted without swapping; `remedy`". */
+  def stagedCompaction(live: Path, who: String, cause: String,
+      remedy: String)(write: Path => Unit): Unit = {
+    healSwap(live)
+    val before = partSet(live)
+    write(staging(live))
+    if (partSet(live) != before) {
+      rmTree(staging(live).toFile)
+      throw new IllegalStateException(s"$who: ${live.getFileName}/ changed " +
+        s"while compacting ($cause) — aborted without swapping; $remedy")
+    }
+    swapDir(live)
+  }
+
   private def retiring(live: Path) =
     live.resolveSibling(live.getFileName.toString + "_retiring")
 
-  /** The staging sibling a compaction writes into before [[swapDir]]. */
-  def staging(live: Path): Path =
+  private def staging(live: Path): Path =
     live.resolveSibling(live.getFileName.toString + "_compacting")
 
-  /** Heal the on-disk state a crashed [[swapDir]] can leave behind: a
-    * swap interrupted between its two renames (live missing, the
-    * retiring copy present) is rolled back, and leftover retiring /
-    * staging directories from a crash after the swap are deleted. Run
-    * at the start of every compaction, so no crash state is sticky. */
-  def healSwap(live: Path): Unit = {
+  private def healSwap(live: Path): Unit = {
     val old = retiring(live)
     if (!Files.exists(live) && Files.exists(old)) Files.move(old, live)
     if (Files.exists(old)) rmTree(old.toFile)
     if (Files.exists(staging(live))) rmTree(staging(live).toFile)
   }
 
-  /** Swap the fully-written [[staging]] directory in for `live` via two
-    * renames and delete the retired copy. A reader BETWEEN the renames
-    * can observe `live` missing — the documented maintenance window of
-    * this plain-filesystem layout; a crash anywhere leaves a state the
-    * next [[healSwap]] repairs. */
-  def swapDir(live: Path): Unit = {
+  private def swapDir(live: Path): Unit = {
     val old = retiring(live)
     Files.move(live, old)
     Files.move(staging(live), live)
@@ -80,16 +136,15 @@ private[graft] object CommitFiles {
     * scheme prefix and trailing slashes stripped, so equivalent
     * spellings can't false-positive) is the fallback when metadata is
     * unreadable. */
-  def lineageId(ck: String): String = {
+  private def lineageId(ck: String): String = {
     def norm(p: String) = p.replaceFirst("^file:(//)?", "").stripSuffix("/")
     val meta = Paths.get(norm(ck), "metadata")
     if (Files.exists(meta)) Files.readString(meta).trim else norm(ck)
   }
 
   /** Claim brand file `b` for lineage `ck`, or assert it already carries
-    * exactly that lineage. `who` prefixes the failure messages (e.g.
-    * "stream_merge"). */
-  def claimOrAssert(b: Path, ck: String, who: String): Unit = {
+    * exactly that lineage. */
+  private def claimOrAssert(b: Path, ck: String, who: String): Unit = {
     def assertBranded(): Unit = {
       // a CREATE_NEW-fallback claimant's bytes land one write after the
       // open — tolerate a transiently empty brand before declaring a

@@ -80,6 +80,8 @@ object MetricPipeline {
         case "LESS_THAN"             => col("avg_value") < r.threshold
         case "GREATER_THAN"          => col("avg_value") > r.threshold
         case "GREATER_THAN_OR_EQUAL" => col("avg_value") >= r.threshold
+        case other =>
+          throw new IllegalArgumentException(s"unknown comparison: $other")
       }
       acc.when(pred, r.name)
     }.otherwise("hold")

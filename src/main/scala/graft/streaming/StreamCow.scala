@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -20,55 +18,53 @@ import graft.lake.CowTable
   * this path's per-batch cost is proportional to the CHANGE LOCALITY
   * and its history is the COW version chain.
   *
-  * Exactly-once: a `_batch` pointer in the table dir records the
-  * highest applied batchId (decoupled from the table version — idle
-  * triggers advance the pointer without a commit). A replay after the
-  * pointer write short-circuits. A crash in the window between the
-  * table commit and the pointer write re-applies the batch on restart —
-  * content-idempotent by construction (a FOLDED batch is one change per
-  * key; replace and delete are both idempotent), so the degraded case
-  * is a duplicate version with identical content, never lost or doubled
-  * rows. The checkpoint-lineage brand makes a wiped-checkpoint restart
-  * loud (the StreamMerge rule).
+  * Exactly-once by the [[CommitFiles.commitBatch]] protocol, with its
+  * own files: a `_batch` pointer records the highest applied batchId
+  * (decoupled from the table version — idle triggers advance the pointer
+  * without a commit) and `_cow_checkpoint` is the lineage brand. A crash
+  * in the window between the table commit and the pointer write
+  * re-applies the batch on restart — content-idempotent by construction
+  * (a FOLDED batch is one change per key; replace and delete are both
+  * idempotent), so the degraded case is a duplicate version with
+  * identical content, never lost or doubled rows.
   *
   * The table must be [[CowTable.init]]-ed before the stream starts —
   * the stream OWNS versions above 0, and interleaving out-of-band
   * merge-on-read deletes mid-stream is refused by applyChanges itself. */
 object StreamCow {
 
-  private def batchPath(dir: String) = Paths.get(dir, "_batch")
-  private def brandPath(dir: String) = Paths.get(dir, "_cow_checkpoint")
+  private val BatchFile = "_batch"
+  private val BrandFile = "_cow_checkpoint"
 
   /** Highest applied batch, if any. */
   def lastBatch(dir: String): Option[Long] =
-    CommitFiles.readPointer(batchPath(dir))
+    CommitFiles.committed(dir, BatchFile)
 
   /** One micro-batch: fold per key, split U/I from D, one COW commit.
     * Safe to replay with the same batchId. */
   def applyBatch(spark: SparkSession, dir: String, changes: DataFrame,
       batchId: Long, seqCol: Option[String] = None,
-      checkpoint: Option[String] = None): Unit = {
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_cow")
+      checkpoint: Option[String] = None): Unit =
+    CommitFiles.commitBatch(dir, "stream_cow", batchId, checkpoint,
+        BatchFile, BrandFile) {
+      changes.persist()
+      try {
+        if (!changes.isEmpty) {
+          val folded = StreamMerge.lastWins(changes, "o_orderkey", seqCol)
+            .persist()
+          try {
+            val dels = folded.filter(col("op") === "D").select(col("o_orderkey"))
+            val ups = folded.filter(col("op") =!= "D")
+              .drop("op").drop(seqCol.toSeq: _*)
+            CowTable.applyChanges(spark, dir, ups, dels)
+          } finally folded.unpersist()
+        }
+        // the pointer flips AFTER the commit: the crash window in between
+        // re-applies a content-idempotent batch (see class doc), never
+        // drops one; an idle trigger flips too
+        true
+      } finally changes.unpersist()
     }
-    if (lastBatch(dir).exists(_ >= batchId)) return
-    changes.persist()
-    try {
-      if (!changes.isEmpty) {
-        val folded = StreamMerge.lastWins(changes, "o_orderkey", seqCol)
-          .persist()
-        try {
-          val dels = folded.filter(col("op") === "D").select(col("o_orderkey"))
-          val ups = folded.filter(col("op") =!= "D")
-            .drop("op").drop(seqCol.toSeq: _*)
-          CowTable.applyChanges(spark, dir, ups, dels)
-        } finally folded.unpersist()
-      }
-      // pointer AFTER the commit: the crash window in between re-applies
-      // a content-idempotent batch (see class doc), never drops one
-      CommitFiles.atomicWrite(batchPath(dir), batchId.toString)
-    } finally changes.unpersist()
-  }
 
   /** The streaming query: an orders change stream with an `op` column →
     * a continuously merged COW table at `dir` (pre-initialized). Pass

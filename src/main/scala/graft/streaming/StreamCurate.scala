@@ -32,14 +32,10 @@ import graft.llm.Pipeline
   * real scale the fps dir would additionally be bucketed by fingerprint
   * so the canonicality join co-locates.
   *
-  * Exactly-once on plain parquet, the [[StreamMerge]] recipe: a batch
-  * overwrites its own two delta dirs (replay-idempotent), then flips the
-  * `_latest` pointer atomically; deltas beyond the pointer are invisible
-  * to readers AND to the state scan, so a crash between write and flip
-  * replays cleanly and a replay after the flip short-circuits. The
-  * output dir is branded with the checkpoint lineage
-  * ([[CommitFiles.claimOrAssert]]) — a fresh checkpoint against old
-  * output fails loudly instead of silently dropping replayed batchIds.
+  * Exactly-once on plain parquet by the [[CommitFiles.commitBatch]]
+  * protocol: a batch overwrites its own two delta dirs, then flips
+  * `_latest`; deltas beyond the pointer are invisible to readers AND to
+  * the state scan. An idle trigger flips nothing.
   *
   * The benchmark set is the STATIC side (a real pipeline's held-out eval
   * suites): read from `benchDir` per batch via the same doc_id % 5 == 0
@@ -49,12 +45,8 @@ import graft.llm.Pipeline
   * first-wins for batched ingest. */
 object StreamCurate {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
-  private def brandPath(dir: String) = Paths.get(dir, "_checkpoint")
-
   /** Highest committed batch id, if any batch has flipped the pointer. */
-  def latestVersion(dir: String): Option[Long] =
-    CommitFiles.readPointer(pointerPath(dir))
+  def latestVersion(dir: String): Option[Long] = CommitFiles.committed(dir)
 
   /** All committed verdict rows (the union of published deltas). */
   def currentVerdicts(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -84,68 +76,64 @@ object StreamCurate {
     * re-shingle the whole eval suite on every trigger, forever. */
   def applyBatch(spark: SparkSession, dir: String, docs: DataFrame,
       batchId: Long, bench: DataFrame,
-      checkpoint: Option[String] = None): Unit = {
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_curate")
+      checkpoint: Option[String] = None): Unit =
+    CommitFiles.commitBatch(dir, "stream_curate", batchId, checkpoint) {
+      docs.persist()
+      try if (docs.isEmpty) false // idle trigger: nothing to publish
+      else {
+        val state = fpState(spark, dir)
+
+        // canonicality: first arrival wins. Batch-first per fingerprint,
+        // demoted if ANY committed batch already carries the fingerprint.
+        // Benchmark docs participate (they can be the canonical first of a
+        // fingerprint, exactly as in the batch query) but get no verdict.
+        val fps = docs.select(col("doc_id"),
+          T.textFingerprint(col("text")).as("fp"))
+        val firsts = fps.groupBy(col("fp"))
+          .agg(min(col("doc_id")).as("batch_first"))
+        val canon = state match {
+          case Some(st) => fps.join(firsts, Seq("fp"))
+            .join(st.select(col("fp"), lit(true).as("seen")), Seq("fp"), "left")
+            .select(col("doc_id"),
+              (col("doc_id") === col("batch_first") && col("seen").isNull)
+                .as("is_canonical"))
+          case None => fps.join(firsts, Seq("fp"))
+            .select(col("doc_id"),
+              (col("doc_id") === col("batch_first")).as("is_canonical"))
+        }
+        // the state DELTA: only fingerprints this batch saw first
+        val newFps = (state match {
+          case Some(st) => firsts.join(st, Seq("fp"), "left_anti")
+          case None => firsts
+        }).select(col("fp"), col("batch_first").as("first_doc"))
+
+        // decontamination against the static benchmark set; benchmark docs
+        // themselves are excluded from verdicts, as in the batch query
+        val corpus = docs.filter(col("doc_id") % Pipeline.benchMod =!= 0)
+        val overlap = Pipeline.shingle8(corpus)
+          .join(bench, Seq("shh"))
+          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
+        val dec = corpus.select(col("doc_id"))
+          .join(overlap, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            (coalesce(col("n_overlap"), lit(0L)) === 0).as("is_clean"))
+
+        // left join: a whitespace-only doc has no filtered words at all —
+        // it must still get a verdict (too_short), not vanish
+        val verdicts = Pipeline.verdictCols(
+          dec.join(Pipeline.wordStats(corpus), Seq("doc_id"), "left")
+            .join(canon, Seq("doc_id"))
+            .select(col("doc_id"), col("is_clean"), col("is_canonical"),
+              coalesce(col("n_words"), lit(0L)).as("n_words"),
+              coalesce(col("uniq_frac"), lit(0.0)).as("uniq_frac")))
+
+        // publish: overwrite THIS batch's delta dirs (replay-idempotent);
+        // the pointer flip after them is the single commit point for both
+        newFps.write.mode("overwrite").parquet(s"$dir/fps/batch=$batchId")
+        verdicts.write.mode("overwrite").parquet(s"$dir/verdicts/batch=$batchId")
+        true
+      } finally docs.unpersist()
     }
-    // replay AFTER the pointer flip: already published — committed = done
-    if (latestVersion(dir).exists(_ >= batchId)) return
-    docs.persist()
-    try {
-      if (docs.isEmpty) return // idle trigger: nothing to publish
-      val state = fpState(spark, dir)
-
-      // canonicality: first arrival wins. Batch-first per fingerprint,
-      // demoted if ANY committed batch already carries the fingerprint.
-      // Benchmark docs participate (they can be the canonical first of a
-      // fingerprint, exactly as in the batch query) but get no verdict.
-      val fps = docs.select(col("doc_id"),
-        T.textFingerprint(col("text")).as("fp"))
-      val firsts = fps.groupBy(col("fp"))
-        .agg(min(col("doc_id")).as("batch_first"))
-      val canon = state match {
-        case Some(st) => fps.join(firsts, Seq("fp"))
-          .join(st.select(col("fp"), lit(true).as("seen")), Seq("fp"), "left")
-          .select(col("doc_id"),
-            (col("doc_id") === col("batch_first") && col("seen").isNull)
-              .as("is_canonical"))
-        case None => fps.join(firsts, Seq("fp"))
-          .select(col("doc_id"),
-            (col("doc_id") === col("batch_first")).as("is_canonical"))
-      }
-      // the state DELTA: only fingerprints this batch saw first
-      val newFps = (state match {
-        case Some(st) => firsts.join(st, Seq("fp"), "left_anti")
-        case None => firsts
-      }).select(col("fp"), col("batch_first").as("first_doc"))
-
-      // decontamination against the static benchmark set; benchmark docs
-      // themselves are excluded from verdicts, as in the batch query
-      val corpus = docs.filter(col("doc_id") % Pipeline.benchMod =!= 0)
-      val overlap = Pipeline.shingle8(corpus)
-        .join(bench, Seq("shh"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
-      val dec = corpus.select(col("doc_id"))
-        .join(overlap, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (coalesce(col("n_overlap"), lit(0L)) === 0).as("is_clean"))
-
-      // left join: a whitespace-only doc has no filtered words at all —
-      // it must still get a verdict (too_short), not vanish
-      val verdicts = Pipeline.verdictCols(
-        dec.join(Pipeline.wordStats(corpus), Seq("doc_id"), "left")
-          .join(canon, Seq("doc_id"))
-          .select(col("doc_id"), col("is_clean"), col("is_canonical"),
-            coalesce(col("n_words"), lit(0L)).as("n_words"),
-            coalesce(col("uniq_frac"), lit(0.0)).as("uniq_frac")))
-
-      // publish: overwrite THIS batch's delta dirs (replay-idempotent),
-      // then flip the pointer — the single commit point for both
-      newFps.write.mode("overwrite").parquet(s"$dir/fps/batch=$batchId")
-      verdicts.write.mode("overwrite").parquet(s"$dir/verdicts/batch=$batchId")
-      CommitFiles.atomicWrite(pointerPath(dir), batchId.toString)
-    } finally docs.unpersist()
-  }
 
   /** Fold every committed delta into ONE `batch=<committed>` partition
     * per table — the delta-count bound the layout's scale story calls
@@ -161,29 +149,21 @@ object StreamCurate {
     * rewrites them in full. Maintenance contract, enforced like
     * `IvfIndex.compact`: run with the stream stopped — a concurrent
     * writer is detected by a file-set fingerprint and compact aborts
-    * loudly; each table's two-rename swap self-heals after any crash
-    * ([[CommitFiles.healSwap]]). A crash between the fps swap and the
-    * verdicts swap leaves one table compacted and the other not — both
+    * loudly; each table's swap self-heals after any crash
+    * ([[CommitFiles.stagedCompaction]]). A crash between the fps swap and
+    * the verdicts swap leaves one table compacted and the other not — both
     * still carry exactly the committed rows, so the state stays
     * consistent and the next compact finishes the job. */
   def compact(spark: SparkSession, dir: String): Unit =
     latestVersion(dir).foreach { v =>
       Seq("fps", "verdicts").foreach { sub =>
         val live = Paths.get(dir, sub)
-        CommitFiles.healSwap(live)
-        if (java.nio.file.Files.exists(live)) {
-          val before = CommitFiles.partSet(live)
+        CommitFiles.stagedCompaction(live, "stream_curate",
+            "stream still running?", "stop the query first") { staging =>
           spark.read.parquet(live.toString)
             .filter(col("batch") <= v).drop("batch")
             .write.mode("overwrite")
-            .parquet(s"${CommitFiles.staging(live)}/batch=$v")
-          if (CommitFiles.partSet(live) != before) {
-            CommitFiles.rmTree(CommitFiles.staging(live).toFile)
-            throw new IllegalStateException(
-              s"stream_curate: $sub/ changed while compacting (stream still " +
-                "running?) — aborted without swapping; stop the query first")
-          }
-          CommitFiles.swapDir(live)
+            .parquet(s"$staging/batch=$v")
         }
       }
     }

@@ -19,21 +19,16 @@ import graft.llm.{PostingsIndex, TextStats}
   * OVERWRITES its own delta partitions —
   * `postings/batch=<id>/tb=<bucket>/` (term-hash-bucketed inside the
   * batch partition, so searches prune on `tb` across every delta) and
-  * `doclen/batch=<id>/` — then flips the `_latest` pointer atomically.
-  * A replayed batch rewrites the same partitions and flips to the same
-  * value; a replay after the flip short-circuits on the pointer —
-  * exactly-once by construction, with the checkpoint-lineage brand
-  * turning a wiped-checkpoint restart into a loud failure instead of
-  * silent drops. Corpus stats (n_docs, avgdl) and per-term df are NEVER
-  * stored — every search derives them from the committed postings/doclen
-  * union, so no append can leave them stale (the [[PostingsIndex]]
-  * rule).
+  * `doclen/batch=<id>/` — committed by the [[CommitFiles.commitBatch]]
+  * protocol; an idle trigger flips nothing. Corpus stats (n_docs, avgdl)
+  * and per-term df are NEVER stored — every search derives them from the
+  * committed postings/doclen union, so no append can leave them stale
+  * (the [[PostingsIndex]] rule).
   *
   * [[compact]] folds committed deltas into one `batch=<committed>`
   * partition per table (preserving the `tb` grid) so years of triggers
-  * cannot degrade the posting-list seek into millions of tiny reads —
-  * same crash-self-healing staged swap, same loud concurrent-writer
-  * abort as the rest of the `CommitFiles` family.
+  * cannot degrade the posting-list seek into millions of tiny reads, by
+  * the [[CommitFiles.stagedCompaction]] protocol.
   *
   * Scale notes: per batch the work is one `termFreqs` aggregation over
   * the BATCH (not the corpus) plus a doc_id membership probe against the
@@ -42,16 +37,12 @@ import graft.llm.{PostingsIndex, TextStats}
   */
 object StreamIndex {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
-  private def brandPath(dir: String) = Paths.get(dir, "_checkpoint")
-
   /** Buckets are frozen for the index's life — the partition grid
     * encodes them (the [[graft.llm.PostingsIndex.build]] contract). */
   val NBuckets = 64
 
   /** Highest committed batch, if any. */
-  def latestVersion(dir: String): Option[Long] =
-    CommitFiles.readPointer(pointerPath(dir))
+  def latestVersion(dir: String): Option[Long] = CommitFiles.committed(dir)
 
   /** The committed postings relation (doc_id, wh, c, tb). */
   def committedPostings(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -72,34 +63,31 @@ object StreamIndex {
     * it would silently double that doc's postings (the
     * [[graft.llm.PostingsIndex.append]] contract). */
   def applyBatch(spark: SparkSession, dir: String, docs: DataFrame,
-      batchId: Long, checkpoint: Option[String] = None): Unit = {
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_index")
+      batchId: Long, checkpoint: Option[String] = None): Unit =
+    CommitFiles.commitBatch(dir, "stream_index", batchId, checkpoint) {
+      docs.persist()
+      try if (docs.isEmpty) false // idle trigger: nothing to publish
+      else {
+        committedDoclen(spark, dir).foreach { dl =>
+          val clash = dl.join(docs.select(col("doc_id")), Seq("doc_id"),
+            "left_semi").limit(1).collect()
+          if (clash.nonEmpty) throw new IllegalStateException(
+            s"stream_index: doc_id ${clash.head.get(0)} is already indexed — " +
+              "a re-ingested doc would double its postings; feed fresh " +
+              "doc_ids (or route updates through a delete-and-reingest " +
+              "compaction)")
+        }
+        val tf = TextStats.termFreqs(docs)
+        tf.select(col("doc_id"), col("wh"), col("c"),
+            PostingsIndex.bucket(NBuckets))
+          .write.mode("overwrite").partitionBy("tb")
+          .parquet(s"$dir/postings/batch=$batchId")
+        tf.groupBy(col("doc_id"))
+          .agg(sum(col("c")).cast(LongType).as("dl"))
+          .write.mode("overwrite").parquet(s"$dir/doclen/batch=$batchId")
+        true
+      } finally docs.unpersist()
     }
-    if (latestVersion(dir).exists(_ >= batchId)) return
-    docs.persist()
-    try {
-      if (docs.isEmpty) return // idle trigger: nothing to publish
-      committedDoclen(spark, dir).foreach { dl =>
-        val clash = dl.join(docs.select(col("doc_id")), Seq("doc_id"),
-          "left_semi").limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"stream_index: doc_id ${clash.head.get(0)} is already indexed — " +
-            "a re-ingested doc would double its postings; feed fresh " +
-            "doc_ids (or route updates through a delete-and-reingest " +
-            "compaction)")
-      }
-      val tf = TextStats.termFreqs(docs)
-      tf.select(col("doc_id"), col("wh"), col("c"),
-          PostingsIndex.bucket(NBuckets))
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$dir/postings/batch=$batchId")
-      tf.groupBy(col("doc_id"))
-        .agg(sum(col("c")).cast(LongType).as("dl"))
-        .write.mode("overwrite").parquet(s"$dir/doclen/batch=$batchId")
-      CommitFiles.atomicWrite(pointerPath(dir), batchId.toString)
-    } finally docs.unpersist()
-  }
 
   /** Top-k BM25 over the live (committed) index for the fixture probe
     * rule — equal to `PostingsIndex.build` + `search` on the same
@@ -130,36 +118,24 @@ object StreamIndex {
   /** Fold every committed delta into ONE `batch=<committed>` partition
     * per table, preserving the `tb` grid. Run with the stream stopped —
     * a concurrent writer aborts the compact loudly; every crash state
-    * self-heals on the next run ([[CommitFiles.healSwap]]). Deltas
-    * beyond the pointer (a batch that crashed before its flip) are
-    * dropped — the restart recomputes and rewrites them in full. */
+    * self-heals on the next run ([[CommitFiles.stagedCompaction]]).
+    * Deltas beyond the pointer (a batch that crashed before its flip)
+    * are dropped — the restart recomputes and rewrites them in full. */
   def compact(spark: SparkSession, dir: String): Unit =
     latestVersion(dir).foreach { v =>
       Seq("postings" -> Seq("tb"), "doclen" -> Seq.empty[String]).foreach {
         case (sub, parts) =>
           val live = Paths.get(dir, sub)
-          CommitFiles.healSwap(live)
-          if (java.nio.file.Files.exists(live)) {
-            val before = CommitFiles.partSet(live)
+          CommitFiles.stagedCompaction(live, "stream_index",
+              "stream still running?", "stop the query first") { staging =>
             val folded = spark.read.parquet(live.toString)
               .filter(col("batch") <= v).drop("batch")
             // postings: all rows of one tb land in one task → exactly one
             // file per bucket (the PostingsIndex.compact shape); doclen is
             // bulk-scanned, never seeked — natural partitioning is fine
-            val writer0 = (if (parts.isEmpty) folded
-              else folded.repartition(parts.map(col): _*))
-              .write.mode("overwrite")
-            val writer =
-              if (parts.isEmpty) writer0 else writer0.partitionBy(parts: _*)
-            writer.parquet(s"${CommitFiles.staging(live)}/batch=$v")
-            if (CommitFiles.partSet(live) != before) {
-              CommitFiles.rmTree(CommitFiles.staging(live).toFile)
-              throw new IllegalStateException(
-                s"stream_index: $sub/ changed while compacting (stream " +
-                  "still running?) — aborted without swapping; stop the " +
-                  "query first")
-            }
-            CommitFiles.swapDir(live)
+            val writer = if (parts.isEmpty) folded.write
+              else folded.repartition(parts.map(col): _*).write.partitionBy(parts: _*)
+            writer.mode("overwrite").parquet(s"$staging/batch=$v")
           }
       }
     }

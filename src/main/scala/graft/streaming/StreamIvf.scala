@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,21 +22,18 @@ import graft.llm.{Ann, IvfIndex}
   * must replace centroids AND every row's cell assignment together (an
   * assignment is meaningless against the wrong centroids); writing the
   * new model in full under `model=<m+1>` and flipping `_model`
-  * atomically leaves no window where a reader can see them mixed — the
-  * manifest-pointer swap the `CommitFiles.swapDir` scaladoc names as
-  * the object-store upgrade, adopted here outright because a fresh
-  * layout could. A crash mid-retrain leaves an unreferenced version
+  * atomically leaves no window where a reader can see them mixed — a
+  * manifest-pointer swap instead of `CommitFiles.stagedCompaction`'s
+  * two-rename one, adopted here outright because a fresh layout could.
+  * A crash mid-retrain leaves an unreferenced version
   * directory the next [[retrain]] deletes ([[healModels]]); nothing is
   * sticky.
   *
-  * Exactly-once (the [[StreamIndex]] contract): each micro-batch
-  * OVERWRITES its own `assign/batch=<id>` partitions inside the live
-  * model, then flips `_latest`; a replay rewrites the same partitions
-  * and flips to the same value, a replay after the flip short-circuits
-  * on the pointer, and the checkpoint-lineage brand turns a
-  * wiped-checkpoint restart into a loud failure instead of silent
-  * drops. Re-ingesting a committed vec_id fails loudly — it would
-  * silently double that vector's posting.
+  * Exactly-once by the [[CommitFiles.commitBatch]] protocol: each
+  * micro-batch OVERWRITES its own `assign/batch=<id>` partitions inside
+  * the live model, then flips `_latest`; an idle trigger flips nothing.
+  * Re-ingesting a committed vec_id fails loudly — it would silently
+  * double that vector's posting.
   *
   * [[retrain]] is this index's compact step: with the stream stopped,
   * re-run the deterministic Lloyd build over the accumulated corpus,
@@ -56,13 +53,10 @@ import graft.llm.{Ann, IvfIndex}
   * the [[graft.llm.IvfIndex]] rule. */
 object StreamIvf {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
   private def modelPath(dir: String) = Paths.get(dir, "_model")
-  private def brandPath(dir: String) = Paths.get(dir, "_checkpoint")
 
   /** Highest committed batch, if any. */
-  def latestVersion(dir: String): Option[Long] =
-    CommitFiles.readPointer(pointerPath(dir))
+  def latestVersion(dir: String): Option[Long] = CommitFiles.committed(dir)
 
   /** Live model version; None before [[init]]. */
   def modelVersion(dir: String): Option[Long] =
@@ -112,40 +106,36 @@ object StreamIvf {
   /** Ingest one micro-batch of embedding rows (vec_id, embedding,
     * label). Safe to replay with the same batchId. */
   def applyBatch(spark: SparkSession, dir: String, vecs: DataFrame,
-      batchId: Long, checkpoint: Option[String] = None): Unit = {
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_ivf")
+      batchId: Long, checkpoint: Option[String] = None): Unit =
+    CommitFiles.commitBatch(dir, "stream_ivf", batchId, checkpoint) {
+      val m = requireModel(dir)
+      vecs.persist()
+      try if (vecs.isEmpty) false // idle trigger: nothing to publish
+      else {
+        committedAssign(spark, dir).foreach { a =>
+          val clash = a.join(vecs.select(col("vec_id")), Seq("vec_id"),
+            "left_semi").limit(1).collect()
+          if (clash.nonEmpty) throw new IllegalStateException(
+            s"stream_ivf: vec_id ${clash.head.get(0)} is already indexed — " +
+              "a re-ingested vector would double its posting; feed fresh " +
+              "vec_ids (or retrain from a deduplicated corpus)")
+        }
+        val cdf = spark.read.parquet(s"${modelDir(dir, m)}/centroids")
+        val assigned = Ann.assignCells(Ann.normedOf(vecs), cdf)
+        // a batch of only zero-norm vectors assigns nothing: writing an
+        // empty partition set would leave a schema-less batch dir, so the
+        // WRITE is skipped — but the pointer still flips, otherwise this
+        // batch replays in full (persist, clash check, assignment) on
+        // every restart until some later batch commits (committedAssign
+        // tolerates the resulting batch-dir gap: it reads what exists)
+        if (!assigned.isEmpty) {
+          assigned
+            .write.mode("overwrite").partitionBy("ck")
+            .parquet(s"${modelDir(dir, m)}/assign/batch=$batchId")
+        }
+        true
+      } finally vecs.unpersist()
     }
-    val m = requireModel(dir)
-    if (latestVersion(dir).exists(_ >= batchId)) return
-    vecs.persist()
-    try {
-      if (vecs.isEmpty) return // idle trigger: nothing to publish
-      committedAssign(spark, dir).foreach { a =>
-        val clash = a.join(vecs.select(col("vec_id")), Seq("vec_id"),
-          "left_semi").limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"stream_ivf: vec_id ${clash.head.get(0)} is already indexed — " +
-            "a re-ingested vector would double its posting; feed fresh " +
-            "vec_ids (or retrain from a deduplicated corpus)")
-      }
-      val cdf = spark.read.parquet(s"${modelDir(dir, m)}/centroids")
-      val assigned = Ann.assignCells(Ann.normedOf(vecs), cdf)
-      // a batch of only zero-norm vectors assigns nothing: writing an
-      // empty partition set would leave a schema-less batch dir, so the
-      // WRITE is skipped — but the pointer still flips, otherwise this
-      // batch replays in full (persist, clash check, assignment) on
-      // every restart until some later batch commits, contradicting the
-      // replay-after-flip short-circuit contract above (committedAssign
-      // tolerates the resulting batch-dir gap: it reads what exists)
-      if (!assigned.isEmpty) {
-        assigned
-          .write.mode("overwrite").partitionBy("ck")
-          .parquet(s"${modelDir(dir, m)}/assign/batch=$batchId")
-      }
-      CommitFiles.atomicWrite(pointerPath(dir), batchId.toString)
-    } finally vecs.unpersist()
-  }
 
   /** Top-5 neighbors for probes 0..4 over the live committed index —
     * the static [[graft.llm.IvfIndex.search]] core over this layout's

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, struct}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -14,19 +12,10 @@ import graft.operators.Merge
   * `q47_merge_upsert`.
   *
   * Exactly-once without a transactional table format: each micro-batch
-  * writes a FULL new snapshot under `dir/v=<batchId>` and then flips a
-  * pointer file by atomic rename. A replayed batch (restart after a crash
-  * between write and flip) simply overwrites `v=<batchId>` and flips to
-  * the same version; a replay AFTER the flip short-circuits on the
-  * committed version — idempotent by construction.
-  *
-  * Idempotence is keyed on batchId, which is only meaningful for ONE
-  * checkpoint lineage: restarting with a fresh checkpoint against an
-  * existing output dir would restart batchIds at 0 and the short-circuit
-  * would silently drop every replayed batch. [[start]] therefore brands
-  * the output dir with its checkpoint path on first commit and FAILS
-  * LOUDLY on a mismatch — wipe the output dir together with the
-  * checkpoint, never one without the other.
+  * writes a FULL new snapshot under `dir/v=<batchId>`, committed by the
+  * [[CommitFiles.commitBatch]] protocol (lineage brand, replay
+  * short-circuit, `_latest` pointer flip). An idle trigger flips
+  * nothing: the pointer would name a `v=` dir that was never written.
   *
   * Batches with several changes for one key need `seqCol` (the CDC
   * sequence/LSN column): the merge keeps the highest-sequence change per
@@ -43,12 +32,8 @@ import graft.operators.Merge
   */
 object StreamMerge {
 
-  private def pointerPath(dir: String) = Paths.get(dir, "_latest")
-  private def brandPath(dir: String) = Paths.get(dir, "_checkpoint")
-
   /** Current table version, if any batch has committed. */
-  def latestVersion(dir: String): Option[Long] =
-    CommitFiles.readPointer(pointerPath(dir))
+  def latestVersion(dir: String): Option[Long] = CommitFiles.committed(dir)
 
   /** The committed table as of the last flipped pointer. */
   def currentTable(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -89,51 +74,37 @@ object StreamMerge {
   def applyBatch(spark: SparkSession, dir: String, changes: DataFrame,
       key: String, batchId: Long, seqCol: Option[String] = None,
       checkpoint: Option[String] = None): Unit = {
-    // lineage brand: see CommitFiles.claimOrAssert — a fresh checkpoint
-    // against this output dir would restart batchIds at 0 and the
-    // short-circuit below would silently drop every replayed batch
-    checkpoint.map(CommitFiles.lineageId).foreach { ck =>
-      CommitFiles.claimOrAssert(brandPath(dir), ck, "stream_merge")
+    val prev = latestVersion(dir)
+    val flipped = CommitFiles.commitBatch(dir, "stream_merge", batchId,
+        checkpoint) {
+      // one materialization for the 3-4 passes below (emptiness probe,
+      // ambiguity checks, touched-keys distinct, the upsert union)
+      changes.persist()
+      try if (changes.isEmpty) false // idle trigger: no snapshot churn
+      else {
+        val base = currentTable(spark, dir)
+          .getOrElse(changes.drop("op").drop(seqCol.toSeq: _*).limit(0))
+        // lastWins already guarantees one change per key → preFolded skips
+        // the merge's duplicate-key pass (a second full scan of changes)
+        Merge.applyChanges(base,
+            lastWins(changes, key, seqCol).drop(seqCol.toSeq: _*),
+            key, preFolded = true)
+          .drop("src")
+          .write.mode("overwrite").parquet(s"$dir/v=$batchId")
+        true
+      } finally changes.unpersist()
     }
-    // replay AFTER the pointer flip: the batch is already in the table —
-    // merging it again would also read v=<batchId> while overwriting the
-    // same path (Spark rejects self-overwrites). Committed = done.
-    if (latestVersion(dir).exists(_ >= batchId)) return
-    // one materialization for the 3-4 passes below (emptiness probe,
-    // ambiguity checks, touched-keys distinct, the upsert union)
-    changes.persist()
-    try {
-      if (changes.isEmpty) return // idle trigger: no snapshot churn
-      val prev = latestVersion(dir)
-      val base = currentTable(spark, dir)
-        .getOrElse(changes.drop("op").drop(seqCol.toSeq: _*).limit(0))
-      // lastWins already guarantees one change per key → preFolded skips
-      // the merge's duplicate-key pass (a second full scan of changes)
-      val merged = Merge
-        .applyChanges(base, lastWins(changes, key, seqCol).drop(seqCol.toSeq: _*),
-          key, preFolded = true)
-        .drop("src")
-      merged.write.mode("overwrite").parquet(s"$dir/v=$batchId")
-      // pointer flip via temp-file + ATOMIC_MOVE: readers see either the
-      // old version or the new one, never a torn pointer
-      CommitFiles.atomicWrite(pointerPath(dir), batchId.toString)
-      // retention: the previous snapshot stays (one-commit reader grace +
-      // the only version a crash-before-flip replay can read); everything
-      // older is unreachable and deleted — disk holds ≤ 2 table copies.
-      // Readers must re-resolve currentTable per query: a DataFrame held
-      // across commits points at a path the NEXT commit may delete.
+    // retention: the previous snapshot stays (one-commit reader grace +
+    // the only version a crash-before-flip replay can read); everything
+    // older is unreachable and deleted — disk holds ≤ 2 table copies.
+    // Readers must re-resolve currentTable per query: a DataFrame held
+    // across commits points at a path the NEXT commit may delete.
+    if (flipped) {
       val keep = Set(Some(batchId), prev).flatten.map(v => s"v=$v")
-      val root = new java.io.File(dir)
-      Option(root.listFiles()).getOrElse(Array.empty)
+      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.startsWith("v=") && !keep(f.getName))
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete()
-          }
-          rm(f)
-        }
-    } finally changes.unpersist()
+        .foreach(CommitFiles.rmTree)
+    }
   }
 
   /** The streaming query: a change stream with an `op` column → a

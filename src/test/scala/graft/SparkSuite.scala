@@ -13,6 +13,15 @@ abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The fixture path for `name`, with anything an earlier run left there
+    * deleted: checkpoints and pointers from a previous run would replay
+    * stale offsets into a new stream, or short-circuit its batches. */
+  def freshDir(name: String): String = {
+    val dir = graft.core.Fixtures.path(name)
+    graft.streaming.CommitFiles.rmTree(new java.io.File(dir))
+    dir
+  }
+
   override def afterAll(): Unit = {
     // keep the shared local JVM session for sibling suites
     super.afterAll()

@@ -45,12 +45,6 @@ class CowSpec extends SparkSuite {
     spark.read.parquet(s"${graft.core.Fixtures.path("cowspec_grid")}/orders.parquet")
   }
 
-  private def fresh(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    graft.streaming.CommitFiles.rmTree(new java.io.File(dir))
-    dir
-  }
-
   private def keys(df: DataFrame): Set[Long] =
     df.select("o_orderkey").collect().map(_.getLong(0)).toSet
 
@@ -439,7 +433,7 @@ class CowSpec extends SparkSuite {
   }
 
   test("optimize with no split fid commits nothing and returns the current version") {
-    val dir = fresh("cowspec_opt_noop")
+    val dir = freshDir("cowspec_opt_noop")
     val orders = graft.core.Tables.orders(spark, sfDir)
       .orderBy("o_orderkey").limit(40)
     CowTable.init(spark, orders, dir)
@@ -453,7 +447,7 @@ class CowSpec extends SparkSuite {
   }
 
   test("a CDC batch rewrites exactly the units holding an upsert or a deleted key") {
-    val dir = fresh("cowspec_cdc_exact")
+    val dir = freshDir("cowspec_cdc_exact")
     CowTable.init(spark, grid, dir)
     // deletes fall inside the upsert stripe (odd keys of ck 100-199 beside
     // the even-key updates of ck 100-149) plus one far key; inserts copy
@@ -477,7 +471,7 @@ class CowSpec extends SparkSuite {
       grid.count() + ins.count() - delKeys.size)
 
     // the merge-on-read path: compaction rewrites exactly the key holders
-    val mor = fresh("cowspec_compact_exact")
+    val mor = freshDir("cowspec_compact_exact")
     CowTable.init(spark, grid, mor)
     CowTable.deleteWhere(spark, mor, del)
     val holding = holders(mor, 1L, delKeys)
@@ -490,7 +484,7 @@ class CowSpec extends SparkSuite {
   }
 
   test("a read of more than 32 units starts no listing or schema-inference job") {
-    val dir = fresh("cowspec_wide")
+    val dir = freshDir("cowspec_wide")
     // custkeys over the whole 16-bit ck range: 64 fids, one unit each
     val rows = (0 until 4096).map { i =>
       ((i + 300000).toLong, i * 16L, "O", i * 1.0,

@@ -17,13 +17,6 @@ class StreamLakeSpec extends SparkSuite {
 
   private val sf001 = "/root/testdata/sf0.01"
 
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    if (root.exists()) CommitFiles.rmTree(root)
-    dir
-  }
-
   private def ingest3(out: String): Unit = {
     val orders = T.orders(spark, sf001)
     def ts(c: String) = lit(c).cast("timestamp")

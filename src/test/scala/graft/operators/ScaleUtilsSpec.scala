@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.core.{Tables => T}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-path utilities: two-phase top-k equivalence, salted-join
@@ -51,8 +52,8 @@ class ScaleUtilsSpec extends SparkSuite {
 
   test("partitioned write -> filtered scan prunes partitions") {
     val out = Files.createTempDirectory("graft_part").toString + "/events"
-    graft.io.Writers.parquetPartitioned(
-      T.events(spark, sfDir), out, Seq("event_type"))
+    T.events(spark, sfDir).write.mode("overwrite")
+      .partitionBy("event_type").parquet(out)
     val scan = spark.read.parquet(out).filter(col("event_type") === "click")
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan)
@@ -66,10 +67,14 @@ class ScaleUtilsSpec extends SparkSuite {
   test("bucketed tables join without a shuffle exchange") {
     val warehouse = Files.createTempDirectory("graft_buck").toString
     val o = T.orders(spark, sfDir).select("o_orderkey", "o_custkey", "o_totalprice")
-    graft.io.Writers.parquetBucketed(o, "orders_b", "o_custkey", 4, warehouse)
+    def bucketed(df: DataFrame, table: String): Unit =
+      df.write.mode("overwrite").bucketBy(4, "o_custkey").sortBy("o_custkey")
+        .option("path", s"$warehouse/$table").format("parquet")
+        .saveAsTable(table)
+    bucketed(o, "orders_b")
     val c = T.customer(spark, sfDir).select("c_custkey", "c_name")
       .withColumnRenamed("c_custkey", "o_custkey")
-    graft.io.Writers.parquetBucketed(c, "customer_b", "o_custkey", 4, warehouse)
+    bucketed(c, "customer_b")
     // disable broadcast so the join would otherwise shuffle both sides
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -8,7 +8,6 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSuite
 import graft.core.{Tables => T}
 import graft.lake.StreamLake
-import graft.streaming.CommitFiles
 
 /** LakeSource's incremental-read contracts: a fresh read sees exactly
   * the committed rows, a checkpointed read resumes with only the new
@@ -18,13 +17,6 @@ import graft.streaming.CommitFiles
 class LakeSourceSpec extends SparkSuite {
 
   private val sf001 = "/root/testdata/sf0.01"
-
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    if (root.exists()) CommitFiles.rmTree(root)
-    dir
-  }
 
   /** Drain all available batches into a row buffer via foreachBatch (the
     * memory sink cannot recover from a checkpoint; foreachBatch can). */

@@ -70,6 +70,8 @@ class MetricPipelineSpec extends SparkSuite {
       .map(r => (r.getDouble(0), r.getString(1))).toMap
     assert(out == Map(10.0 -> "scale-out", 25.0 -> "scale-out",
       50.0 -> "hold", 80.0 -> "scale-in"))
+    intercept[IllegalArgumentException](
+      classify(avgs, Seq(graft.state.Scaling.Rule("x", "BOGUS", 1.0, 0, 0L))))
   }
 
   /** Drives the scripted low-usage epochs through `decide` on `session`,

@@ -20,12 +20,6 @@ final case class CowChange(o_orderkey: Long, o_custkey: Long,
 class StreamCowSpec extends SparkSuite {
   import spark.implicits._
 
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    graft.streaming.CommitFiles.rmTree(new java.io.File(dir))
-    dir
-  }
-
   private def ts(day: Int) = new Timestamp((9131L + day) * 86400000L)
 
   private def ch(k: Long, ck: Long, price: Double, op: String,

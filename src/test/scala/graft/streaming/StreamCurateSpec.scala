@@ -13,17 +13,6 @@ import org.apache.spark.sql.functions.col
   * delta publication must be replay-idempotent and lineage-branded. */
 class StreamCurateSpec extends SparkSuite {
 
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (root.exists()) rm(root)
-    dir
-  }
-
   private val sf0001 = "/root/testdata/sf0.001"
 
   /** doc_id-range terciles of the fixture — batches arrive in id order,

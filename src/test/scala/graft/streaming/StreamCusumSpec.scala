@@ -81,12 +81,6 @@ class StreamCusumSpec extends SparkSuite {
 
   test("checkpointed restart carries the running statistic across queries") {
     MetricPipeline.ensureRocksDbStateStore(spark)
-    def freshDir(name: String): String = {
-      val dir = graft.core.Fixtures.path(name)
-      val root = new java.io.File(dir)
-      if (root.exists()) CommitFiles.rmTree(root)
-      dir
-    }
     val srcDir = freshDir("cusum_src")
     val outDir = freshDir("cusum_out_pq")
     val ckpt = freshDir("cusum_ckpt")

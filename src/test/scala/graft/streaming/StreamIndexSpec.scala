@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions.col
   * loud re-ingest refusal, and reader-invisible compaction. */
 class StreamIndexSpec extends SparkSuite {
 
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (root.exists()) rm(root)
-    dir
-  }
-
   private val sf001 = "/root/testdata/sf0.01"
 
   private def chunks = {
@@ -92,6 +81,19 @@ class StreamIndexSpec extends SparkSuite {
       StreamIndex.applyBatch(spark, out, chunks(1), 2L) // same docs, new batch
     }
     assert(err.getMessage.contains("already indexed"))
+  }
+
+  test("checkpoint-lineage brand: a different checkpoint against the same dir fails loudly") {
+    val out = freshDir("streamindex_brand")
+    StreamIndex.applyBatch(spark, out, chunks(0), 0L, Some("/ckpt/one"))
+    // same lineage: fine, even on replay
+    StreamIndex.applyBatch(spark, out, chunks(0), 0L, Some("/ckpt/one"))
+    val e = intercept[IllegalStateException] {
+      StreamIndex.applyBatch(spark, out, chunks(1), 1L, Some("/ckpt/two"))
+    }
+    assert(e.getMessage.startsWith("stream_index: ") &&
+      e.getMessage.contains("lineage"), e.getMessage)
+    assert(StreamIndex.latestVersion(out).contains(0L))
   }
 
   test("compact self-heals every crash state a previous compact can leave") {

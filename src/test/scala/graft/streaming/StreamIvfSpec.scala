@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions.col
   * self-heals its crash states. */
 class StreamIvfSpec extends SparkSuite {
 
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    if (root.exists()) CommitFiles.rmTree(root)
-    dir
-  }
-
   private val sf001 = "/root/testdata/sf0.01"
 
   private def chunks = {
@@ -94,6 +87,20 @@ class StreamIvfSpec extends SparkSuite {
       StreamIvf.applyBatch(spark, out, chunks(1), 2L) // same vecs, new batch
     }
     assert(err.getMessage.contains("already indexed"))
+  }
+
+  test("checkpoint-lineage brand: a different checkpoint against the same dir fails loudly") {
+    val out = freshDir("streamivf_brand")
+    StreamIvf.init(spark, sf001, out)
+    StreamIvf.applyBatch(spark, out, chunks(0), 0L, Some("/ckpt/one"))
+    // same lineage: fine, even on replay
+    StreamIvf.applyBatch(spark, out, chunks(0), 0L, Some("/ckpt/one"))
+    val e = intercept[IllegalStateException] {
+      StreamIvf.applyBatch(spark, out, chunks(1), 1L, Some("/ckpt/two"))
+    }
+    assert(e.getMessage.startsWith("stream_ivf: ") &&
+      e.getMessage.contains("lineage"), e.getMessage)
+    assert(StreamIvf.latestVersion(out).contains(0L))
   }
 
   test("streaming before init fails loudly") {

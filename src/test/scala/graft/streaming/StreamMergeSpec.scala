@@ -13,19 +13,6 @@ final case class MergeChange(k: Long, payload: String, op: String)
 class StreamMergeSpec extends SparkSuite {
   import spark.implicits._
 
-  /** Fresh fixture dir: checkpoints and pointers from a previous sbt run
-    * would replay stale offsets into a brand-new MemoryStream. */
-  private def freshDir(name: String): String = {
-    val dir = graft.core.Fixtures.path(name)
-    val root = new java.io.File(dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (root.exists()) rm(root)
-    dir
-  }
-
   test("epochs fold into the table in order; deletes drop; upserts replace") {
     val dir = freshDir("streammerge")
     val ckpt = freshDir("streammerge_ckpt")
